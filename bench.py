@@ -25,7 +25,7 @@ compute without measuring driver-side row deserialization (which no
 collect()). The harness itself caches nothing between queries; the
 catalog's own documented session-scoped caches (widened docs/embeddings,
 shingle sets — the same ones every consumer of the engine gets) do apply,
-and are dropped via clear_caches() at teardown.
+and are dropped via clear_session_caches() at teardown.
 
 Wall time is the per-query MEDIAN of 3 timed reps (round-1 ran
 best-of-2; the driver/recorded gap in BENCH_r01 was ~1.7× of pure box
@@ -47,7 +47,11 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nyc_traffic_insight_spark.queries import load_all  # noqa: E402
-from nyc_traffic_insight_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from nyc_traffic_insight_spark.session import (  # noqa: E402
+    DEFAULT_SF_DIR,
+    clear_session_caches,
+    get_spark,
+)
 
 # The r1-anchored 25-query subset: the standing like-for-like wall
 # line every BASELINE.md recording reports, and the set the calibrated
@@ -632,9 +636,7 @@ def main() -> None:
         )
     # Drop every persisted block the catalog accumulated (widened
     # docs/embeddings, shingle sets) before stopping — VERDICT r3 #6.
-    from nyc_traffic_insight_spark.queries.textops import clear_caches
-
-    clear_caches(spark)
+    clear_session_caches(spark)
     spark.stop()
     # Compact headline line LAST so the driver's output-tail capture
     # always retains it. r16 (VERDICT r15 #8): the line grew past the

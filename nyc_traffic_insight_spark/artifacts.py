@@ -45,20 +45,32 @@ import shutil
 import tempfile
 from typing import Any, Callable, Sequence
 
-_CLEANUP_REGISTERED: set[str] = set()
+_REMOVE_AT_EXIT: set[str] = set()
+
+
+def remove_at_exit(path: str) -> str:
+    """Register ``path`` for removal at interpreter exit (once per
+    path) and return it — the lifetime of every per-process scratch
+    directory: sink/rescan staging, bucketed warehouse tables and the
+    default artifact store."""
+    if path not in _REMOVE_AT_EXIT:
+        _REMOVE_AT_EXIT.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+def process_root(name: str) -> str:
+    """``<tmp>/<name>/pid<PID>``: deterministic within a process, disjoint
+    across concurrent processes, removed at interpreter exit."""
+    return remove_at_exit(
+        os.path.join(tempfile.gettempdir(), name, f"pid{os.getpid()}")
+    )
 
 
 def artifact_root() -> str:
-    root = os.environ.get("NTIS_ARTIFACT_DIR")
-    if root:
-        return root
-    root = os.path.join(
-        tempfile.gettempdir(), "ntis_artifacts", f"pid{os.getpid()}"
+    return os.environ.get("NTIS_ARTIFACT_DIR") or process_root(
+        "ntis_artifacts"
     )
-    if root not in _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
 
 
 def _fingerprint(

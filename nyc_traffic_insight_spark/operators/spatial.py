@@ -32,29 +32,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# probe result per applicationId — a process can run several sessions
-# with different jar sets, so a global flag would leak one session's
-# capability onto the next (same keying convention as textops'
-# _WIDE_CACHE)
-_SEDONA_STATE: dict[str, bool] = {}
+from nyc_traffic_insight_spark.session import session_cached
 
 
 def sedona_enabled(spark: SparkSession) -> bool:
     """True iff Apache Sedona is importable AND registers on THIS
-    session (needs both the Python package and the JVM jars)."""
-    app = spark.sparkContext.applicationId
-    cached = _SEDONA_STATE.get(app)
-    if cached is not None:
-        return cached
-    try:
-        from sedona.spark import SedonaContext  # noqa: PLC0415
+    session (needs both the Python package and the JVM jars). Probed
+    once per session: a process can run several sessions with
+    different jar sets, so a global flag would leak one session's
+    capability onto the next."""
 
-        SedonaContext.create(spark)
-        spark.sql("SELECT ST_Point(0.0, 0.0)").collect()
-        _SEDONA_STATE[app] = True
-    except Exception:  # ImportError or missing jars — fall back
-        _SEDONA_STATE[app] = False
-    return _SEDONA_STATE[app]
+    def probe() -> bool:
+        try:
+            from sedona.spark import SedonaContext  # noqa: PLC0415
+
+            SedonaContext.create(spark)
+            spark.sql("SELECT ST_Point(0.0, 0.0)").collect()
+            return True
+        except Exception:  # ImportError or missing jars — fall back
+            return False
+
+    return session_cached(spark, ("sedona",), probe)
 
 
 def _builtin_dist2() -> F.Column:

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_traffic_insight_spark.queries import register
+from nyc_traffic_insight_spark.session import materialize
 from nyc_traffic_insight_spark.sources import load_table
 from nyc_traffic_insight_spark.functions.rounding import exact_avg, exact_sum, r as _r
 
@@ -1134,7 +1135,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: three groupBy(user_id) aggregations and two joins, all
     keyed on user_id — each stage shuffles its per-user table on that
-    one key inside its own materialized job (localCheckpoint below),
+    one key inside its own materialized job (``materialize`` below),
     and each stage's table shrinks monotonically (funnel!), so later
     joins broadcast. The final readout is three one-row stage-count
     merges (the SinglePartition exchanges accounted in
@@ -1152,7 +1153,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t0"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     c = (
         ev.filter(F.col("event_type") == "click")
@@ -1160,7 +1161,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t0"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -1168,7 +1169,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     def stage(ord_: int, name: str, df: DataFrame) -> DataFrame:

@@ -28,6 +28,7 @@ from nyc_traffic_insight_spark.functions.rounding import (
     scaled_long,
 )
 from nyc_traffic_insight_spark.queries import register
+from nyc_traffic_insight_spark.session import materialize
 from nyc_traffic_insight_spark.sources import load_table
 from nyc_traffic_insight_spark.sources.catalog import load_table_wide
 
@@ -1521,7 +1522,7 @@ def _score_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id", "score", F.coalesce("p", F.lit(0)).alias("label")
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
 
 

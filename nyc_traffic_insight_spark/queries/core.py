@@ -8,12 +8,12 @@ Reference citations are in the survey rows named in ``survey=``.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_traffic_insight_spark import schemas
+from nyc_traffic_insight_spark.artifacts import process_root, remove_at_exit
 from nyc_traffic_insight_spark.plans.flagship import flagship_volume_features
 from nyc_traffic_insight_spark.queries import register
 from nyc_traffic_insight_spark.sources import load_table
@@ -33,24 +33,7 @@ def _tmp(sf_dir: str, name: str) -> str:
     vanishes dies with a confusing 'basePath not found'. The process
     root is removed at interpreter exit."""
     tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(
-        tempfile.gettempdir(), "ntis_scratch", f"pid{os.getpid()}"
-    )
-    _register_scratch_cleanup(root)
-    return os.path.join(root, tag, name)
-
-
-_CLEANUP_REGISTERED: set[str] = set()
-
-
-def _register_scratch_cleanup(root: str) -> None:
-    if root in _CLEANUP_REGISTERED:
-        return
-    _CLEANUP_REGISTERED.add(root)
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return os.path.join(process_root("ntis_scratch"), tag, name)
 
 
 # --------------------------------------------------------------- flagship
@@ -1000,19 +983,12 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     process's warehouse directories are removed at interpreter exit
     (the catalog itself is in-memory), so runs don't accumulate
     orphaned table data on disk."""
-    import atexit
-    import os
-    import shutil
-
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     suffix = f"{tag}_{os.getpid()}"
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     wh = wh.removeprefix("file:")
     for t in (f"orders_bkt_{suffix}", f"lineitem_bkt_{suffix}"):
-        key = os.path.join(wh, t)
-        if key not in _CLEANUP_REGISTERED:
-            _CLEANUP_REGISTERED.add(key)
-            atexit.register(shutil.rmtree, key, ignore_errors=True)
+        remove_at_exit(os.path.join(wh, t))
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     (

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_traffic_insight_spark.queries import register
+from nyc_traffic_insight_spark.session import session_cached
 
 
 # r15 (VERDICT r14 #3): the linear fit behind the M8/M9 audits is a
@@ -22,13 +23,10 @@ from nyc_traffic_insight_spark.queries import register
 # and every serving/scoring session loads it; re-running the LBFGS fit
 # per cold call was a dominant per-call cost (the driver always runs
 # cold). Content-addressed via artifacts.artifact_path (lineitem+part
-# bytes + the split tag), with a per-(app, path) session memo in front
-# so one session never loads twice. MLlib save is not atomic, so the
-# build writes to a pid-suffixed temp dir and renames into place; on a
-# lost race the winner's artifact is loaded.
-_LR_MODEL_MEMO: dict = {}
-
-
+# bytes + the split tag), with the session registry in front so one
+# session never loads twice. MLlib save is not atomic, so the build
+# writes to a pid-suffixed temp dir and renames into place; on a lost
+# race the winner's artifact is loaded.
 def _cached_lr_model(spark: SparkSession, sf_dir: str, split: str):
     """PipelineModel for the linear fit on `split` ('temporal_train'
     or 'full'), loaded from the content-addressed artifact when
@@ -48,13 +46,10 @@ def _cached_lr_model(spark: SparkSession, sf_dir: str, split: str):
     path = artifact_path(
         "lr_model", sf_dir, ["lineitem", "part"], {"split": split}, suffix=""
     )
-    memo_key = (spark.sparkContext.applicationId, path)
-    model = _LR_MODEL_MEMO.get(memo_key)
-    if model is not None:
-        return model
-    if os.path.isdir(path):
-        model = PipelineModel.load(path)
-    else:
+
+    def load_or_fit():
+        if os.path.isdir(path):
+            return PipelineModel.load(path)
         df = feature_table(spark, sf_dir)
         train = temporal_split(df)[0] if split == "temporal_train" else df
         model = fit_linear_regression(train)
@@ -64,8 +59,9 @@ def _cached_lr_model(spark: SparkSession, sf_dir: str, split: str):
             os.rename(tmp, path)
         except OSError:  # concurrent builder won; use its artifact
             shutil.rmtree(tmp, ignore_errors=True)
-    _LR_MODEL_MEMO[memo_key] = model
-    return model
+        return model
+
+    return session_cached(spark, ("lr_model", path), load_or_fit)
 
 
 # na.drop(subset=FEATURES+[LABEL]) on the feature table: every derived

@@ -29,6 +29,7 @@ from nyc_traffic_insight_spark.functions.rounding import (
     r4_sql,
 )
 from nyc_traffic_insight_spark.queries import register
+from nyc_traffic_insight_spark.session import materialize
 from nyc_traffic_insight_spark.sources import load_table
 
 # ------------------------------------------------------------- sampling
@@ -656,7 +657,7 @@ def _hll_regs_df(spark: SparkSession, sf_dir: str):
         # materialized once: est_t, the pair spine, and both tagged
         # join legs all reuse the |types|x64 register table — without
         # this, lineage inlining re-scans the fact table per reference
-        .localCheckpoint()
+        .transform(materialize)
     )
 
 
@@ -818,7 +819,7 @@ def agg_wau_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-enumerate.
 
     The deduplicated (day, user) table is materialized once
-    (localCheckpoint) so the day spine derives from IT — without that,
+    (``materialize``) so the day spine derives from IT — without that,
     Spark inlines the lineage and pays a second full fact scan just to
     list the distinct days (the sketch_qdigest lesson)."""
     ev = load_table(spark, sf_dir, "events")
@@ -827,7 +828,7 @@ def agg_wau_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts").cast("date").alias("d"), "user_id"
         )
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     days = du.select("d").distinct().withColumnRenamed("d", "spine_d")
     fanout = du.select(
@@ -921,7 +922,7 @@ def sketch_hll_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("d", "bucket")
         .agg(F.max("rho").alias("max_rho"))
-    ).localCheckpoint()
+    ).transform(materialize)
     days = regs.select("d").distinct().withColumnRenamed("d", "spine_d")
     fanout = regs.select(
         "bucket",
@@ -1573,7 +1574,7 @@ def pipeline_unimax_corpus(
     # feeds both the k-row allocation aggregate and the final join,
     # and without the checkpoint each branch would recompute the
     # whole curation plan (review r12; the sketch_hll_rolling
-    # localCheckpoint precedent above).
+    # materialize precedent above).
     flags = (
         d.select(
             "doc_id",
@@ -1593,7 +1594,7 @@ def pipeline_unimax_corpus(
             & ~F.col("is_contaminated"),
         )
         .drop("con_flag")
-        .localCheckpoint()
+        .transform(materialize)
     )
     lt = (
         flags.filter("survives")

@@ -29,6 +29,7 @@ from pyspark.storagelevel import StorageLevel
 
 from nyc_traffic_insight_spark.artifacts import cached_json
 from nyc_traffic_insight_spark.queries import REGISTRY, register
+from nyc_traffic_insight_spark.session import materialize, session_cached
 from nyc_traffic_insight_spark.sources import load_table
 from nyc_traffic_insight_spark.functions.rounding import r as _r
 
@@ -74,19 +75,11 @@ _NGRAM_JACCARD_SELECT = """
     """
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Truncate lineage for a loop-carried DataFrame.
-
-    Reliable ``checkpoint()`` when the session has a checkpoint dir
-    configured (the cluster profile: survives executor loss, required at
-    100 TB where an iteration's input must be re-readable); otherwise
-    ``localCheckpoint()`` — executor-loss-UNSAFE but zero-config, the
-    right trade on local[*] where executors and driver share one JVM.
-    """
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint()
-    return df.localCheckpoint()
+# shared with sources.catalog since round 6 (load_table_wide uses the
+# same footer gate without this module's persist cache)
+from nyc_traffic_insight_spark.sources.catalog import (  # noqa: E402
+    parquet_row_groups as _parquet_row_groups,
+)
 
 
 # One persisted, widened DataFrame per (application, sf_dir, table) for
@@ -98,21 +91,11 @@ def _materialize(df: DataFrame) -> DataFrame:
 # (VERDICT r3 "What's wrong" #2).  Now the exchange (a) only happens when
 # the parquet footer says the scan genuinely cannot parallelize (row
 # groups < cores — the single-row-group local fixture), and (b) happens
-# ONCE per session, with the widened result persisted and shared, same
-# pattern as _SHINGLE_CACHE below.  On a real cluster the row-group count
+# ONCE per session, with the widened result persisted and shared
+# through the session registry.  On a real cluster the row-group count
 # dwarfs the core count and this is a plain pass-through scan.
-_WIDE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-# shared with sources.catalog since round 6 (load_table_wide uses the
-# same footer gate without this module's persist cache)
-from nyc_traffic_insight_spark.sources.catalog import (  # noqa: E402
-    parquet_row_groups as _parquet_row_groups,
-)
-
-
 def _wide_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``load_table`` + conditional one-time widening (see _WIDE_CACHE)."""
+    """``load_table`` + conditional one-time widening (see above)."""
     df = load_table(spark, sf_dir, name)
     para = spark.sparkContext.defaultParallelism
     rg = _parquet_row_groups(sf_dir, name)
@@ -120,12 +103,11 @@ def _wide_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # cluster shape: the scan itself is (at least potentially) as
         # wide as the session — no exchange, no cache.
         return df
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _WIDE_CACHE.get(key)
-    if cached is None:
-        cached = df.repartition(para).persist(StorageLevel.MEMORY_AND_DISK)
-        _WIDE_CACHE[key] = cached
-    return cached
+    return session_cached(
+        spark,
+        ("wide", sf_dir, name),
+        lambda: df.repartition(para).persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -143,35 +125,6 @@ def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     products run in interpreted higher-order functions, so scan
     parallelism directly bounds throughput."""
     return _wide_table(spark, sf_dir, "embeddings")
-
-
-def clear_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist every cached DataFrame this module holds (the widened
-    docs/embeddings tables and the shingle sets), optionally scoped to
-    one session's applicationId.  Bench teardown calls this so no
-    persisted blocks outlive the run; returns the number of entries
-    dropped (tests assert on it and on the held frames' storage
-    levels — NOT the global getPersistentRDDs count, which the async
-    ContextCleaner makes non-monotone in a shared session)."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    dropped = 0
-    for cache in (_WIDE_CACHE, _SHINGLE_CACHE, _SIG_CACHE):
-        for key in list(cache):
-            if app is not None and key[0] != app:
-                continue
-            df = cache.pop(key)
-            try:
-                df.unpersist(blocking=True)
-            except Exception:  # noqa: BLE001 - session already stopped
-                pass
-            dropped += 1
-    # driver-held literal caches (no executor state, just drop the dict
-    # entries so a fresh session recomputes)
-    for key in list(_IVF_CENTROID_CACHE):
-        if app is None or key[0] == app:
-            _IVF_CENTROID_CACHE.pop(key)
-            dropped += 1
-    return dropped
 
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,14 +157,9 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One persisted shingle-set DataFrame per (application, sf_dir).  The
 # LSH pipeline consumes it three times per build, connected-components
 # builds LSH again, and bench runs each builder 4× (warmup + 3 reps) —
-# without this cache every invocation persisted a fresh lineage whose
+# without the registry every invocation persisted a fresh lineage whose
 # disk blocks are only freed by driver-GC-triggered ContextCleaner
-# (ADVICE r2 #2).  Keyed by applicationId so a restarted session never
-# sees another session's (invalid) DataFrame; stale entries from stopped
-# sessions hold only an unreferenceable plan object, no executor state.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# (ADVICE r2 #2).
 def _shingle_sets_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-empty per-doc shingle sets, persisted MEMORY_AND_DISK once per
     (app, sf_dir) and shared by every consumer in the session.
@@ -220,16 +168,13 @@ def _shingle_sets_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself — a memory-only cache would recompute-on-evict exactly where
     it hurts. On a cluster the equivalent is checkpointing the shingle
     table to parquet between phases."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        df = (
-            _shingle_sets(spark, sf_dir)
-            .filter(F.size("sh") > 0)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _SHINGLE_CACHE[key] = df
-    return df
+    return session_cached(
+        spark,
+        ("shingles", sf_dir),
+        lambda: _shingle_sets(spark, sf_dir)
+        .filter(F.size("sh") > 0)
+        .persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -460,27 +405,18 @@ def dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 # branch would run the explode + 8-way-min signature aggregation
 # independently.  Keyed by the INPUT frame's canonicalized-plan hash,
 # not sf_dir, because the helper takes an arbitrary shingle-set frame.
-# Cleared by clear_caches like the other session caches.
-_SIG_CACHE: dict[tuple[str, int], DataFrame] = {}
-
-
 def _lsh_sig_persisted(ds: DataFrame) -> DataFrame:
     """Minhash signature table for a shingle-set frame, persisted once
     per (app, input plan) — narrow (doc_id + 8 ints), so the persist
     is cheap; on a cluster the equivalent is checkpointing the
     signature table to parquet between phases."""
-    spark = ds.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        ds._jdf.queryExecution().analyzed().semanticHash(),
-    )
-    sig = _SIG_CACHE.get(key)
-    if sig is None:
-        sig = _sig_from_shingles(
+    return session_cached(
+        ds.sparkSession,
+        ("lsh_sig", ds._jdf.queryExecution().analyzed().semanticHash()),
+        lambda: _sig_from_shingles(
             ds.select("doc_id", F.explode("sh").alias("s"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _SIG_CACHE[key] = sig
-    return sig
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def _lsh_candidate_pairs(
@@ -780,7 +716,7 @@ def qa_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (review r13; same rationale as truth below)
     sig = _sig_from_shingles(
         ds.select("doc_id", F.explode("sh").alias("s"))
-    ).localCheckpoint()
+    ).transform(materialize)
     # truth feeds all |_SWEEP_GEOMS| one-row aggregates — materialize
     # the narrow pair list once (the pipeline_unimax_corpus
     # checkpoint rationale)
@@ -788,7 +724,7 @@ def qa_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ngram_jaccard_pairs(ds.select("doc_id", F.explode("sh").alias("s")))
         .select("doc1", "doc2")
         .withColumn("is_true", F.lit(True))
-        .localCheckpoint()
+        .transform(materialize)
     )
     rows = []
     for b, r in _SWEEP_GEOMS:
@@ -1425,7 +1361,7 @@ def qa_contamination_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(eval_set), "s", "left_semi")
         .distinct()
         .withColumn("is_hit", F.lit(True))
-        .localCheckpoint()  # feeds the n-gram count AND the doc join
+        .transform(materialize)  # feeds the n-gram count AND the doc join
     )
     # four one-row aggregates crossJoined — fully engine-side and
     # lazy (the qa_freshness_audit one-row-constant shape); each
@@ -1908,44 +1844,39 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
     k×dim ≈ 10×64 doubles: an index artifact, not data — the same object
     a 100 TB deployment would compute from sampled KMeans, store, and
     ship to every query as a broadcast/literal."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _IVF_CENTROID_CACHE.get(key)
-    if got is None:
 
-        def _build() -> list:
-            e = _embs(spark, sf_dir)
-            comp = e.select(
-                "label", F.posexplode("embedding").alias("pos", "v")
-            )
-            cent = comp.groupBy("label", "pos").agg(
-                _r(F.avg(F.col("v").cast("double")), 6).alias("c")
-            )
-            centroids = cent.groupBy("label").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda x: x["c"],
-                ).alias("cvec")
-            )
-            return sorted(
-                [row["label"], list(row["cvec"])]
-                for row in centroids.collect()
-            )
-
-        # Second level: the content-addressed disk artifact (r15,
-        # VERDICT r14 #3) — a fresh session (the driver always runs
-        # cold) loads the index instead of re-deriving it; the
-        # fingerprint over the embeddings bytes makes stale reuse
-        # impossible. JSON round-trips the round(,6) doubles exactly,
-        # so literal embedding stays bit-identical to the oracle's
-        # recomputation either way.
-        got = cached_json(
-            "ivf_centroids", sf_dir, ["embeddings"], {"dim": _DIM}, _build
+    def _build() -> list:
+        e = _embs(spark, sf_dir)
+        comp = e.select(
+            "label", F.posexplode("embedding").alias("pos", "v")
         )
-        _IVF_CENTROID_CACHE[key] = got
-    return got
+        cent = comp.groupBy("label", "pos").agg(
+            _r(F.avg(F.col("v").cast("double")), 6).alias("c")
+        )
+        centroids = cent.groupBy("label").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "c"))),
+                lambda x: x["c"],
+            ).alias("cvec")
+        )
+        return sorted(
+            [row["label"], list(row["cvec"])]
+            for row in centroids.collect()
+        )
 
-
-_IVF_CENTROID_CACHE: dict[tuple[str, str], list] = {}
+    # Second level: the content-addressed disk artifact (r15, VERDICT
+    # r14 #3) — a fresh session (the driver always runs cold) loads the
+    # index instead of re-deriving it; the fingerprint over the
+    # embeddings bytes makes stale reuse impossible. JSON round-trips
+    # the round(,6) doubles exactly, so literal embedding stays
+    # bit-identical to the oracle's recomputation either way.
+    return session_cached(
+        spark,
+        ("ivf_centroids", sf_dir),
+        lambda: cached_json(
+            "ivf_centroids", sf_dir, ["embeddings"], {"dim": _DIM}, _build
+        ),
+    )
 
 
 def _fold_idx_sql(payload, ddl: str) -> str:
@@ -3001,9 +2932,10 @@ def gopher_rules_frame(d: DataFrame) -> DataFrame:
     downstream column (ten of them; `keep` alone referenced all
     four counts) is a field read. The r15 form re-evaluated the
     splits ~19× per row (plan: 41 `split(` sites); this form runs
-    each scan once. Values are bit-identical — the per-column
-    expressions are unchanged, only their shared subterms are
-    evaluated once."""
+    each scan once or twice — ``toks`` is still split for both the
+    word count and the alpha filter (plan: 3 `split(` sites). Values
+    are bit-identical — the per-column expressions are unchanged,
+    only their shared subterms are evaluated fewer times."""
     toks = F.split(F.trim("text"), r"\s+")
     low_toks = F.split(F.lower("text"), r"\s+")
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
@@ -3879,13 +3811,13 @@ def min_label_components(
     a dedup pipeline can have. Differentially tested against Python
     union-find on adversarial graphs (paths, cycles, stars) in
     tests/test_textops_graph.py."""
-    edges = _materialize(
+    edges = materialize(
         pairs.select(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
         .unionByName(
             pairs.select(F.col(col_b).alias("a"), F.col(col_a).alias("b"))
         )
     )  # the loop reuses edges every round
-    labels = _materialize(
+    labels = materialize(
         edges.select(F.col("a").alias("v"))
         .distinct()
         .withColumn("label", F.col("v"))
@@ -3897,7 +3829,7 @@ def min_label_components(
             .groupBy(F.col("a").alias("v2"))
             .agg(F.min("label").alias("nmin"))
         )
-        labels = _materialize(
+        labels = materialize(
             labels.join(neigh, labels.v == neigh.v2, "left")
             .select(
                 "v",
@@ -4669,7 +4601,7 @@ register(
 # window ids. Scale shape: the union of its parts — the rule gate is
 # a pure map, packing is the two-phase prefix sum, the shuffle is the
 # two-phase hash rank; the manifest (corpus_tokens/L rows) is
-# localCheckpointed once because it feeds both the shuffle and the
+# materialized once because it feeds both the shuffle and the
 # final stats join. Registered r13 (the register call follows the
 # oracle and its late-import helper below).
 
@@ -4691,7 +4623,7 @@ def pipeline_pretrain_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv_docs = d.join(surv, "doc_id").select("doc_id", "text")
     wins = pack_manifest_frame(
         surv_docs, _CTX_LEN, _PACK_BUCKET
-    ).localCheckpoint()
+    ).transform(materialize)
     shuf = epoch_shuffle_frame(
         wins.select(F.col("window_id").alias("doc_id")),
         _ORDER_EPOCHS,

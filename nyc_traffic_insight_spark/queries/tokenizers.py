@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from nyc_traffic_insight_spark.queries import register
 from nyc_traffic_insight_spark.functions.rounding import r as _r, r4_sql
-from nyc_traffic_insight_spark.queries.textops import _docs, _materialize
+from nyc_traffic_insight_spark.queries.textops import _docs
+from nyc_traffic_insight_spark.session import materialize
 
 
 _VOCAB_TOPK = 100
@@ -256,7 +257,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("term")
         # bounded-k table materialized once so the scoring join doesn't
         # re-derive the vocabulary's corpus scan
-        .localCheckpoint()
+        .transform(materialize)
     )
     flagged = words.join(
         F.broadcast(ranked.withColumn("in_vocab", F.lit(1))), "term", "left"
@@ -776,7 +777,7 @@ def bpe_encode_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (token, n_occurrences), _BPE_TOP_TOKENS rows max, ties broken by
     token ASC."""
     v = f"__bpe{next(_BPE_SEQ)}"
-    wf = _materialize(_bpe_wf(spark, sf_dir))
+    wf = materialize(_bpe_wf(spark, sf_dir))
     wf.createOrReplaceTempView(f"{v}_wf")
     try:
         merges = _bpe_train_local(_bpe_collect_vocab(spark, f"{v}_wf"))
@@ -1071,10 +1072,10 @@ def _lm_run_chain(
         .select("doc_id", "p.w1", "p.w2")
         .createOrReplaceTempView(f"{v}_pairs")
     )
-    _materialize(
+    materialize(
         spark.sql(_lm_vocab_body(f"{v}_toks", cap))
     ).createOrReplaceTempView(f"{v}_vocab")
-    _materialize(
+    materialize(
         spark.sql(
             f"WITH mpairs AS ({_lm_mpairs_body(f'{v}_pairs', f'{v}_vocab')}) "
             + _lm_bg_body("mpairs")

@@ -11,15 +11,23 @@ the right default on a large cluster too:
   ~2–3× total cores.
 - Arrow enabled so the few Pandas-UDF paths (CRS reprojection,
   multimodal decode) batch-transfer instead of pickling rows.
+
+It is also the one seam for state shared within a session:
+``materialize`` (the single way to cut a lineage) and
+``session_cached`` / ``clear_session_caches`` (the single registry of
+per-session builds).
 """
 
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, Hashable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get(
+    "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+)
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -60,3 +68,68 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and cut its lineage, for a result that several
+    consumers (or loop iterations) reuse.
+
+    Reliable ``checkpoint()`` when the session has a checkpoint dir
+    configured (the cluster profile: survives executor loss, required at
+    100 TB where a reused input must be re-readable); otherwise
+    ``localCheckpoint()`` — executor-loss-unsafe but zero-config, the
+    right trade on local[*] where executors and driver share one JVM.
+    Runs in the caller's job group, so its jobs count toward the
+    caller's build."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
+
+
+_HELD: dict[tuple, Any] = {}
+
+
+def _dropped(value: Any) -> bool:
+    # read the storage level, not ``is_cached``: after
+    # ``catalog.clearCache()`` the Python flag still reads True while
+    # the CacheManager holds nothing for the plan
+    if not isinstance(value, DataFrame):
+        return False
+    lvl = value.storageLevel
+    return not (lvl.useMemory or lvl.useDisk)
+
+
+def session_cached(
+    spark: SparkSession, key: tuple[Hashable, ...], build: Callable[[], Any]
+) -> Any:
+    """``build()`` once per (application, *key); later calls return the
+    same object, so every consumer's plan reads the one persisted
+    relation (``InMemoryTableScan``) or reuses the one driver-side value.
+
+    Keyed by ``applicationId`` so a restarted session never sees another
+    session's (invalid) DataFrame; entries from stopped sessions hold
+    only an unreferenceable plan object, no executor state.  A held
+    DataFrame must be persisted by ``build``; if its storage was dropped
+    behind the registry's back (``catalog.clearCache()``) it is rebuilt
+    rather than returned as a silently uncached plan."""
+    k = (spark.sparkContext.applicationId, *key)
+    value = _HELD.get(k)
+    if value is None or _dropped(value):
+        value = _HELD[k] = build()
+    return value
+
+
+def clear_session_caches(spark: SparkSession | None = None) -> int:
+    """Drop every registry entry (only ``spark``'s application's when
+    given), unpersisting held DataFrames; returns the number dropped."""
+    app = spark.sparkContext.applicationId if spark is not None else None
+    dropped = 0
+    for k in [k for k in _HELD if app is None or k[0] == app]:
+        value = _HELD.pop(k)
+        if isinstance(value, DataFrame):
+            try:
+                value.unpersist(blocking=True)
+            except Exception:  # noqa: BLE001 - session already stopped
+                pass
+        dropped += 1
+    return dropped

@@ -13,6 +13,7 @@ hash) from a genuine semantic difference.
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 
@@ -37,6 +38,8 @@ def duck_connect(sf_dir: str):
             # Spark-written scratch corpora (the decade/L3 probes) are
             # directory tables; read their part files recursively.
             p = os.path.join(p, "**", "*.parquet")
+            if not glob.glob(p, recursive=True):
+                continue  # no part files: absent, like a missing file
         elif not os.path.exists(p):
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")

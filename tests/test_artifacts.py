@@ -74,11 +74,13 @@ def test_ivf_centroids_artifact_roundtrip(spark):
     """The real consumer: a fresh load from disk must give the same
     literals a fresh in-session build gives (the oracle embeds them)."""
     import nyc_traffic_insight_spark.queries.textops as t
+    from nyc_traffic_insight_spark import session
     from tests.conftest import SF_SMOKE
 
-    t._IVF_CENTROID_CACHE.clear()
+    memo = (spark.sparkContext.applicationId, "ivf_centroids", SF_SMOKE)
+    session._HELD.pop(memo, None)
     first = t._ivf_centroids(spark, SF_SMOKE)  # artifact hit or build
-    t._IVF_CENTROID_CACHE.clear()
+    assert session._HELD.pop(memo) is first
     second = t._ivf_centroids(spark, SF_SMOKE)  # guaranteed disk hit
     assert first == second
     assert all(len(vec) == t._DIM for _, vec in second)

@@ -1,21 +1,25 @@
 """Session-scoped cache lifecycle (VERDICT r3 "Next round" #1 and #6).
 
-The textops catalog holds two documented caches — the widened
-docs/embeddings tables (_WIDE_CACHE) and the persisted shingle sets
-(_SHINGLE_CACHE). These tests pin:
+The textops catalog shares the widened docs/embeddings tables and the
+persisted shingle sets through the session registry
+(``session.session_cached``). These tests pin:
 
 - the widening only fires when the parquet footer says the scan cannot
   reach session parallelism (single-row-group local fixture), and the
   resulting exchange happens ONCE per (app, sf_dir), not per query;
-- clear_caches() drops every block the module persisted (bench calls it
-  at teardown so no storage outlives the run).
+- clear_session_caches() drops every block the registry holds (bench
+  calls it at teardown so no storage outlives the run);
+- a registry hit whose storage ``catalog.clearCache()`` dropped is
+  rebuilt, so consumers keep reading the cached relation.
 """
 
 from __future__ import annotations
 
 from tests.conftest import SF_SMOKE
 
+from nyc_traffic_insight_spark import session
 from nyc_traffic_insight_spark.queries import textops
+from nyc_traffic_insight_spark.session import clear_session_caches
 
 
 def _is_persisted(df) -> bool:
@@ -34,26 +38,30 @@ def _persistent_ids(spark) -> set:
     # flake-free where the count comparison was not — the cleaner
     # removing some OTHER test's GC'd id shrinks both sides of the
     # diff consistently, while the ids THIS test creates are pinned by
-    # the module caches until clear_caches() and so cannot be
+    # the registry until clear_session_caches() and so cannot be
     # collected mid-test
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in jmap.keySet().toArray()}
 
 
+def _held(spark) -> dict:
+    app = spark.sparkContext.applicationId
+    return {k[1:]: v for k, v in session._HELD.items() if k[0] == app}
+
+
 def test_wide_table_cached_once_per_session(spark):
-    textops.clear_caches(spark)
+    clear_session_caches(spark)
     d1 = textops._docs(spark, SF_SMOKE)
     d2 = textops._docs(spark, SF_SMOKE)
     # same persisted DataFrame object — one exchange per session, every
     # later consumer reads the cached partitions
     assert d1 is d2
-    key = (spark.sparkContext.applicationId, SF_SMOKE, "documents")
-    assert key in textops._WIDE_CACHE
+    assert _held(spark)[("wide", SF_SMOKE, "documents")] is d1
     # the fixture is a single row group, so widening must have fired to
     # session parallelism
     d1.write.format("noop").mode("overwrite").save()
     assert d1.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    textops.clear_caches(spark)
+    clear_session_caches(spark)
 
 
 def test_row_group_gate_skips_wide_scans(tmp_path, spark):
@@ -75,15 +83,14 @@ def test_row_group_gate_skips_wide_scans(tmp_path, spark):
     pq.write_table(tbl, str(docs), row_group_size=1)  # 64 row groups
     assert textops._parquet_row_groups(str(tmp_path), "documents") == 64
     df = textops._docs(spark, str(tmp_path))
-    key = (spark.sparkContext.applicationId, str(tmp_path), "documents")
-    assert key not in textops._WIDE_CACHE
+    assert ("wide", str(tmp_path), "documents") not in _held(spark)
     assert not _is_persisted(df)
     # pass-through: plan is the raw scan, no Exchange node
     assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_clear_caches_unpersists_everything(spark):
-    textops.clear_caches(spark)
+    clear_session_caches(spark)
     before_ids = _persistent_ids(spark)
     textops._docs(spark, SF_SMOKE).count()
     textops._embs(spark, SF_SMOKE).count()
@@ -92,24 +99,43 @@ def test_clear_caches_unpersists_everything(spark):
     assert cents and cents is textops._ivf_centroids(spark, SF_SMOKE)
     # the blocks THIS test's calls persisted — the review-restored
     # GLOBAL leak detector (a persisted frame the module forgot to
-    # track in its cache dicts would show up here and survive the
+    # track in the registry would show up here and survive the
     # clear below), in the flake-free id-set form
     new_ids = _persistent_ids(spark) - before_ids
     assert len(new_ids) >= 3
-    # the cache dicts must be populated, and every entry the module
-    # holds must actually be marked persisted
-    assert len(textops._WIDE_CACHE) + len(textops._SHINGLE_CACHE) >= 3
-    held = list(textops._WIDE_CACHE.values()) + list(
-        textops._SHINGLE_CACHE.values()
-    )
+    # the registry must be populated, and every DataFrame it holds
+    # must actually be marked persisted
+    entries = _held(spark)
+    assert {
+        ("wide", SF_SMOKE, "documents"),
+        ("wide", SF_SMOKE, "embeddings"),
+        ("shingles", SF_SMOKE),
+        ("ivf_centroids", SF_SMOKE),
+    } <= set(entries)
+    held = [v for k, v in entries.items() if k[0] in ("wide", "shingles")]
+    assert len(held) >= 3
     assert all(_is_persisted(df) for df in held)
-    dropped = textops.clear_caches(spark)
+    dropped = clear_session_caches(spark)
     assert dropped >= 4
-    assert not textops._WIDE_CACHE
-    assert not textops._SHINGLE_CACHE
-    assert not textops._IVF_CENTROID_CACHE
-    # clear_caches(blocking=True) must have dropped the module's own
+    assert not _held(spark)
+    # unpersist(blocking=True) must have dropped the registry's own
     # blocks (held-frame storage levels) AND every block this test
     # created (the id-set diff — catches untracked persists too)
     assert all(not _is_persisted(df) for df in held)
     assert not (_persistent_ids(spark) & new_ids)
+
+
+def test_hit_after_clear_cache_reads_cached_relation(spark):
+    # catalog.clearCache() drops the registry's blocks behind its back;
+    # the held frame then still reports is_cached but its storage level
+    # is NONE, and a plain dict hit would hand every consumer the
+    # uncached plan (re-running the widening exchange per query)
+    clear_session_caches(spark)
+    textops._docs(spark, SF_SMOKE).count()
+    spark.catalog.clearCache()
+    docs = textops._docs(spark, SF_SMOKE)
+    assert _is_persisted(docs)
+    plan = docs.filter("doc_id >= 0")._jdf.queryExecution().executedPlan()
+    assert "InMemoryTableScan" in plan.toString()
+    assert textops._docs(spark, SF_SMOKE) is docs
+    clear_session_caches(spark)

@@ -87,3 +87,23 @@ def test_rotation_front_names_all_exist():
     missing = [n for n in _CHECK_FIRST if n not in reg]
     assert not missing, f"_CHECK_FIRST names not in registry: {missing}"
     assert len(set(_CHECK_FIRST)) == len(_CHECK_FIRST), "duplicate rotation names"
+
+
+def test_duck_connect_skips_directory_without_part_files(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_utils import duck_connect
+
+    (tmp_path / "events.parquet").mkdir()  # e.g. an aborted Spark write
+    (tmp_path / "orders.parquet").mkdir()
+    pq.write_table(
+        pa.table({"o_orderkey": [1, 2]}),
+        str(tmp_path / "orders.parquet" / "part-0.parquet"),
+    )
+    con = duck_connect(str(tmp_path))
+    views = {
+        r[0] for r in con.execute("SELECT view_name FROM duckdb_views()").fetchall()
+    }
+    assert "orders" in views and "events" not in views
+    assert con.execute("SELECT count(*) FROM orders").fetchone()[0] == 2

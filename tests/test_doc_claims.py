@@ -97,13 +97,11 @@ def _fresh_cache(spark):
     the exchange count reads doubled. Audit claims against the
     cache-free plan — what a fresh session (and the 100 TB run) gets.
 
-    clear_caches() (not bare clearCache) also drops textops' cache
-    DICTS: clearCache alone would strand _WIDE_CACHE holding
-    no-longer-persisted DataFrames that never re-persist (the dict hit
-    short-circuits), silently slowing every later suite module."""
-    from nyc_traffic_insight_spark.queries.textops import clear_caches
+    clear_session_caches() unpersists and drops the session registry's
+    entries; clearCache() then drops every other cached relation."""
+    from nyc_traffic_insight_spark.session import clear_session_caches
 
-    clear_caches(spark)
+    clear_session_caches(spark)
     spark.catalog.clearCache()
     yield
 

@@ -68,6 +68,7 @@ def test_wide_table_passthrough_on_cluster_shaped_layout(spark, tmp_path):
     builder returns the raw scan: no Exchange, no InMemoryRelation, no
     cache entry, and a real downstream query produces identical results
     against either layout."""
+    from nyc_traffic_insight_spark import session
     from nyc_traffic_insight_spark.queries import textops
 
     staged = tmp_path / "sf_cluster"
@@ -79,8 +80,8 @@ def test_wide_table_passthrough_on_cluster_shaped_layout(spark, tmp_path):
         assert rg is not None and rg >= 64  # one row group per file min
 
         df = textops._wide_table(spark, str(staged), name)
-        key = (spark.sparkContext.applicationId, str(staged), name)
-        assert key not in textops._WIDE_CACHE
+        key = (spark.sparkContext.applicationId, "wide", str(staged), name)
+        assert key not in session._HELD
         plan = df._jdf.queryExecution().executedPlan().toString()
         optimized = df._jdf.queryExecution().optimizedPlan().toString()
         assert "Exchange" not in plan

@@ -15,8 +15,8 @@ the new shape and its sharing contract:
   corpus-sized self-join broadcasts) the candidate join is a shuffled
   join over hash-partitioned exchanges;
 - the signature table is persisted ONCE and shared by both branches of
-  the self-join (the InMemoryRelation appears, and clear_caches drops
-  the entry).
+  the self-join (the InMemoryRelation appears, and
+  clear_session_caches drops the entry).
 """
 
 from __future__ import annotations
@@ -63,16 +63,23 @@ def test_lsh_composers_have_no_collectlist(spark):
 def test_lsh_signature_is_persisted_and_cleared(spark):
     """The self-join's two branches must read ONE materialized
     signature (NOTES r1: self-joins defeat exchange reuse), and
-    clear_caches must drop it with the other session caches."""
+    clear_session_caches must drop it with the other session caches."""
     import nyc_traffic_insight_spark.queries.textops as t
+    from nyc_traffic_insight_spark import session
 
-    t.clear_caches(spark)
+    def sigs():
+        app = spark.sparkContext.applicationId
+        return [
+            v for k, v in session._HELD.items() if k[:2] == (app, "lsh_sig")
+        ]
+
+    session.clear_session_caches(spark)
     ds = t._shingle_sets_persisted(spark, SF_SMOKE)
     plan = _executed_plan(t._lsh_candidate_pairs(ds))
     assert "InMemoryTableScan" in plan
-    assert len(t._SIG_CACHE) == 1
-    sig = next(iter(t._SIG_CACHE.values()))
+    assert len(sigs()) == 1
+    sig = sigs()[0]
     assert sig.storageLevel.useMemory
-    dropped = t.clear_caches(spark)
+    dropped = session.clear_session_caches(spark)
     assert dropped >= 1
-    assert len(t._SIG_CACHE) == 0
+    assert len(sigs()) == 0

@@ -1,0 +1,73 @@
+"""The session-state seam in ``session.py``: its cluster-profile branch
+and its host-derived defaults.
+
+- ``materialize`` takes the reliable ``checkpoint()`` branch when the
+  session has a checkpoint dir: every rewritten materialization site
+  writes its checkpoint files there, and the queries built on them
+  still match their DuckDB oracles;
+- with ``SPARK_GRAFT_CPUS`` unset, the default ``local[N]`` is the
+  host's usable core count (what ``nproc`` reports), not a fixed 32.
+"""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+from nyc_traffic_insight_spark.queries import load_all
+from tests.conftest import SF_ORACLE
+from tests.oracle_utils import compare
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# each builds on at least one ``materialize`` site
+_CHECKPOINTED = [
+    "funnel_conversion",
+    "agg_wau_exact",
+    "pipeline_unimax_corpus",
+    "pipeline_pretrain_order",
+    "bpe_encode_top_tokens",
+]
+
+
+def test_checkpoint_dir_branch_matches_oracles(spark, duck, tmp_path):
+    specs = load_all()
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        for name in _CHECKPOINTED:
+            before = set(tmp_path.rglob("rdd-*"))
+            spec = specs[name]
+            got = spec.builder(spark, SF_ORACLE).toPandas()
+            assert set(tmp_path.rglob("rdd-*")) - before, (
+                f"{name} wrote no reliable checkpoint"
+            )
+            compare(got, duck.sql(spec.oracle).df(), name)
+    finally:
+        unset = sc._jvm.scala.Option.apply(None)
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(unset)
+    assert sc.getCheckpointDir() is None
+
+
+@pytest.mark.parametrize("env_cpus", [None, "3"])
+def test_default_cpus_follow_host(env_cpus):
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    if env_cpus is not None:
+        env["SPARK_GRAFT_CPUS"] = env_cpus
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from nyc_traffic_insight_spark.session import DEFAULT_CPUS;"
+            "print(DEFAULT_CPUS)",
+        ],
+        cwd=_REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert out == (env_cpus or str(len(os.sched_getaffinity(0))))

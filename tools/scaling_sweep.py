@@ -50,7 +50,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402  (repo-root bench.py: HEADLINE + _exec_totals)
 from nyc_traffic_insight_spark.queries import load_all  # noqa: E402
-from nyc_traffic_insight_spark.session import get_spark  # noqa: E402
+from nyc_traffic_insight_spark.session import (  # noqa: E402
+    clear_session_caches,
+    get_spark,
+)
 
 
 def _sf_of(path: str) -> float:
@@ -138,9 +141,7 @@ def main() -> int:
             f"| {'SUPER-LINEAR' if flag else 'ok'} |"
         )
 
-    from nyc_traffic_insight_spark.queries.textops import clear_caches
-
-    clear_caches(spark)
+    clear_session_caches(spark)
 
     print(
         f"\nData ratio {data_ratio:.0f}x ({args.lo} -> {args.hi}); "
