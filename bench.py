@@ -6,7 +6,7 @@ Prints ONE compact JSON line as the FINAL line of stdout:
    "subset25": ..., "calib": ..., "calib25": ...,
    "value_calibrated": ..., "subset25_calibrated": ...}
 
-Per-query executor metrics (shuffle-write / spill byte deltas), the
+Per-query executor metrics (shuffle-write / spill bytes per rep), the
 per-query [min, max] wall spreads, the probe battery and the host
 facts go to a separate file, BENCH_metrics.json next to this script —
 round 2 put metrics on the headline line, which overflowed the
@@ -31,18 +31,20 @@ Wall time is the per-query MEDIAN of 3 timed reps (round-1 ran
 best-of-2; the driver/recorded gap in BENCH_r01 was ~1.7× of pure box
 noise, so the extra rep buys outlier resistance). Alongside wall time
 the harness records per-query executor metrics — shuffle write bytes
-and spilled bytes, deltas read from Spark's public status REST API —
-so a slow-but-same-shuffle rerun (box noise) is distinguishable from a
-plan regression (more bytes moved) without re-reading plans.
+and spilled bytes of each rep's own Spark job groups (``measure``),
+read from the public status REST API — so a slow-but-same-shuffle
+rerun (box noise) is distinguishable from a plan regression (more
+bytes moved) without re-reading plans.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import statistics
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,6 +54,7 @@ from nyc_traffic_insight_spark.session import (  # noqa: E402
     clear_session_caches,
     get_spark,
 )
+from perfbench.jobtrace import attribute, read_status, untag  # noqa: E402
 
 # The r1-anchored 25-query subset: the standing like-for-like wall
 # line every BASELINE.md recording reports, and the set the calibrated
@@ -366,95 +369,60 @@ def _env_diagnostics() -> dict:
     return out
 
 
-def _flush_status(spark) -> None:
-    """Drain the listener-bus backlog so the status store reflects
-    every finished task BEFORE a byte snapshot (r15 measurement fix,
-    documented in OPTIMIZATION_r15.md): on a busy box the appStatus
-    listener lags seconds behind task completion, so a query's shuffle
-    bytes could post AFTER its 'after' snapshot and leak into the NEXT
-    query's window — dedup_semantic's anchor flapped 76 kB ↔ 235 kB
-    across otherwise identical runs from exactly this (the 'late
-    landing' clamp note at the call sites caught the negative half of
-    the race but not the cross-window attribution). The flush runs
-    OUTSIDE the timed region; walls are unaffected."""
-    try:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-    except Exception:  # noqa: BLE001 - metrics are best-effort
-        pass
+_CALLS = itertools.count()
 
 
-def _settled_totals(spark, ui_url: str | None) -> dict[str, int]:
-    """Flush-then-poll byte snapshot: drain the listener bus, read the
-    executor totals, and repeat until two consecutive reads agree (or a
-    ~3 s budget runs out). The r15 flush alone narrows but does not
-    close the attribution race on a loaded box: the appStatus store's
-    async write path can post a query's bytes AFTER waitUntilEmpty
-    returns, so a window opened immediately still inherits the tail of
-    the PREVIOUS query's bytes (observed: pipeline_d4_curation's rep0
-    window caught ~900 kB of upstream-tier late bytes → the recorded
-    per-query mean read 3.2× its own plan's shuffle). Totals are
-    monotonic per executor lifetime, so equality across a poll gap
-    means the backlog has drained. Runs OUTSIDE the timed region —
-    walls are computed from perf_counter around the reps only."""
-    _flush_status(spark)
-    prev = _exec_totals(ui_url)
-    deadline = time.perf_counter() + 3.0
-    while time.perf_counter() < deadline:
-        time.sleep(0.15)
-        _flush_status(spark)
-        cur = _exec_totals(ui_url)
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
+def measure(spark, label: str, build, reps: int = 3) -> dict:
+    """Time ``reps`` runs of ``consume(build())`` and attribute each
+    run's executor bytes by Spark job group — the one measure path that
+    ``main`` and the tools' sweeps and probes share.
 
-
-def _exec_totals(ui_url: str | None) -> dict[str, int]:
-    """Cumulative shuffle-write bytes from the executors REST endpoint
-    (monotonic per-executor lifetime totals — NOT subject to stage
-    eviction, so no retainedStages bump is needed; that bump kept the
-    driver status store huge and inflated every r3 query ~1.2–1.45×,
-    VERDICT r3 "What's wrong" #3).  Spill bytes are only exposed on
-    stage objects, so those still come from the stages endpoint as a
-    best-effort read at the DEFAULT retention (a full run stays under
-    the 1000-stage default; if eviction ever fires the delta clamps to
-    0 rather than corrupting).  Zeros if the UI is unreachable so
-    metrics degrade gracefully to wall-time-only. Callers snapshotting
-    a per-query window must _flush_status(spark) first."""
-    if not ui_url:
-        return {"shuffle_write_bytes": 0, "spilled_bytes": 0}
-    out = {"shuffle_write_bytes": 0, "spilled_bytes": 0}
-    try:
-        with urllib.request.urlopen(f"{ui_url}/api/v1/applications", timeout=5) as r:
-            app_id = json.load(r)[0]["id"]
-        with urllib.request.urlopen(
-            f"{ui_url}/api/v1/applications/{app_id}/executors", timeout=5
-        ) as r:
-            execs = json.load(r)
-        out["shuffle_write_bytes"] = sum(
-            e.get("totalShuffleWrite", 0) for e in execs
-        )
-        with urllib.request.urlopen(
-            f"{ui_url}/api/v1/applications/{app_id}/stages?status=complete",
-            timeout=5,
-        ) as r:
-            stages = json.load(r)
-        out["spilled_bytes"] = sum(
-            s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-            for s in stages
-        )
-    except Exception:  # noqa: BLE001 - metrics are best-effort
-        pass
+    Rep k runs ``build()`` under job group ``<label>#build`` and the
+    noop sink under ``<label>#sink``; the group description names the
+    call and the rep (``m<call>r<k>``), so repeated measurements of one
+    label in one session never share a key.  Returns ``walls`` (seconds,
+    build + sink, per rep) and, when the session has a UI, per-rep
+    ``shuffle_w`` and ``spill`` bytes (build + sink) read once from the
+    status REST API after the reps; without a UI both are ``None``.  A
+    stage's metrics reach the status store when the stage completes, so
+    a group never picks up another query's late-posting bytes."""
+    sc = spark.sparkContext
+    call = next(_CALLS)
+    tags = [f"m{call}r{k}" for k in range(reps)]
+    walls = []
+    for tag in tags:
+        # collect the previous run's garbage outside the timed region:
+        # a late query must not pay an earlier query's GC debt
+        sc._jvm.System.gc()
+        try:
+            sc.setJobGroup(f"{label}#build", tag)
+            t0 = time.perf_counter()
+            df = build()
+            sc.setJobGroup(f"{label}#sink", tag)
+            consume(df)
+            walls.append(time.perf_counter() - t0)
+        finally:
+            untag(sc)
+    out = {"walls": walls, "shuffle_w": None, "spill": None}
+    if sc.uiWebUrl:
+        groups = attribute(*read_status(sc.uiWebUrl))
+        for field in ("shuffle_w", "spill"):
+            out[field] = [
+                sum(
+                    groups.get((f"{label}#{part}", tag), {}).get(field, 0)
+                    for part in ("build", "sink")
+                )
+                for tag in tags
+            ]
     return out
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    # UI on: its REST API is where executor metrics come from.  Status
-    # store retention stays at defaults — shuffle totals come from the
-    # executors endpoint (lifetime-cumulative, eviction-proof), see
-    # _exec_totals.
+    # UI on: its status REST API is where measure() reads each job
+    # group's stage metrics, once per query, so the default stage
+    # retention covers every read.
     env_before = _env_diagnostics()
     spark = get_spark(
         app_name="ntis-bench",
@@ -466,7 +434,6 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui_url = spark.sparkContext.uiWebUrl
     specs = load_all()
 
     # Warmup pass: run every headline query once at the smallest SF so
@@ -498,71 +465,29 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
-    query_metrics: dict[str, dict[str, int]] = {}
-    n_reps = 3
+    query_metrics: dict[str, dict] = {}
     for qi, name in enumerate(HEADLINE):
         if qi == len(HEADLINE) // 2:
             probe_mid = calibration_probe(spark)
-        reps = []
-        rep_bytes: list[dict[str, int]] = []
-        prev = _settled_totals(spark, ui_url)
-        for _ in range(n_reps):
-            # Collect garbage from the PREVIOUS run outside the timed
-            # region: ~50 plans per session leave broadcast blocks and
-            # shuffle state behind, and a late query otherwise pays an
-            # earlier query's GC debt (isolation, not speedup).
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            consume(specs[name].builder(spark, sf_dir))
-            reps.append(time.perf_counter() - t0)
-            # per-REP byte window (settled on both edges, outside the
-            # timed region). max(0, ...) clamps the async-status-store
-            # race where the edge lands before the final stage posts
-            # (ADVICE r2 #1) — a negative delta is always bogus.
-            cur = _settled_totals(spark, ui_url)
-            rep_bytes.append({k: max(0, cur[k] - prev[k]) for k in prev})
-            prev = cur
+        m = measure(spark, name, lambda: specs[name].builder(spark, sf_dir))
+        reps = m["walls"]
         # median-of-3: robust to a single scheduler/GC hiccup in either
         # direction, unlike best-of (optimistic) or mean (one bad rep
         # drags it)
-        timings[name] = round(sorted(reps)[n_reps // 2], 3)
-        # [min, max] across reps rides the headline line (VERDICT r4
-        # #7): a reader can separate box noise (wide spread around a
-        # stable median) from real drift (tight spread at a new level)
-        # without access to this machine. Full rep lists go to the
-        # metrics sidecar.
+        timings[name] = round(statistics.median_high(reps), 3)
+        # [min, max] across reps: a reader can separate box noise (wide
+        # spread around a stable median) from real drift (tight spread
+        # at a new level) without access to this machine
         spreads[name] = [round(min(reps), 3), round(max(reps), 3)]
-        # per-rep byte MEDIAN (r15 second measurement fix, declared in
-        # OPTIMIZATION_r15.md item 11): the reps run the same plan, so
-        # each clean window reads the same bytes and the median IS the
-        # per-run value — and a single window polluted by late-posting
-        # bytes the settle budget could not drain (observed: a ~900 kB
-        # upstream burst landing in pipeline_d4_curation's first rep
-        # window on a loaded box, reading 3.2x on an unchanged plan)
-        # is discarded exactly like a wall hiccup. On clean runs the
-        # median equals the old aggregate//n_reps value, so anchors
-        # stay comparable.
         query_metrics[name] = {
-            k: sorted(rb[k] for rb in rep_bytes)[n_reps // 2]
-            for k in rep_bytes[0]
+            "shuffle_write_bytes": statistics.median_high(m["shuffle_w"]),
+            "spilled_bytes": statistics.median_high(m["spill"]),
+            "rep_secs": [round(x, 3) for x in reps],
+            "rep_bytes": {
+                "shuffle_write_bytes": m["shuffle_w"],
+                "spilled_bytes": m["spill"],
+            },
         }
-        query_metrics[name]["rep_secs"] = [round(x, 3) for x in reps]
-        # ADVICE r15 #1: when the per-rep windows DISAGREE beyond a
-        # small tolerance, keep the full per-rep list in the sidecar
-        # so a systematic first-rep asymmetry (e.g. a fill cost the
-        # median would silently discard) is distinguishable from a
-        # transient attribution burst. Clean runs (all reps within
-        # 10% or 4 kB of the median) stay list-free, so the sidecar
-        # does not grow on the common path.
-        disagree = {}
-        for k in rep_bytes[0]:
-            vals = [rb[k] for rb in rep_bytes]
-            med = sorted(vals)[n_reps // 2]
-            tol = max(4096, med // 10)
-            if any(abs(v - med) > tol for v in vals):
-                disagree[k] = vals
-        if disagree:
-            query_metrics[name]["rep_bytes_disagree"] = disagree
 
     probe_after = calibration_probe(spark)
     samples = [p for p in (probe_before, probe_mid, probe_after) if p]

@@ -20,6 +20,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyc_traffic_insight_spark.functions.geo import wkt_point_x, wkt_point_y
 from nyc_traffic_insight_spark.queries import register
 from nyc_traffic_insight_spark.sources import load_table
 from nyc_traffic_insight_spark.functions.rounding import r as _r
@@ -44,16 +45,15 @@ from nyc_traffic_insight_spark.functions.rounding import r as _r
 )
 def str_wkt_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build a WKT column (integer-formatted so both engines print
-    identically), then parse it back with the same regex the engine uses
-    for real WKT geometry."""
+    identically), then parse it back with the engine's WKT POINT
+    helpers (``functions/geo.wkt_point_x``/``wkt_point_y``)."""
     ev = load_table(spark, sf_dir, "events")
     wkt = F.format_string("POINT (%d.25 %d.75)", "user_id", F.col("event_id") % 1000)
-    pat = r"POINT \(([-0-9.]+) ([-0-9.]+)\)"
     return ev.select(
         "event_id",
         wkt.alias("WktGeom"),
-        F.regexp_extract(wkt, pat, 1).cast("double").alias("lon"),
-        F.regexp_extract(wkt, pat, 2).cast("double").alias("lat"),
+        wkt_point_x(wkt).alias("lon"),
+        wkt_point_y(wkt).alias("lat"),
     )
 
 

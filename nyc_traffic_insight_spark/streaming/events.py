@@ -304,78 +304,3 @@ def correlate_streams(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
             <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
         ),
     ).select("c_user", "click_id", "click_ts", "purchase_id", "purchase_ts", "amount")
-
-
-def sessionize_tws(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
-    """The same sessionizer on the transformWithStateInPandas API
-    (Spark 4 arbitrary-state v2): a StatefulProcessor holding the open
-    session in a ValueState. Functionally identical to
-    sessionize_stateful; exists because the v2 API adds state TTL,
-    timers and multiple typed state variables — the direction custom
-    stateful operators are headed.
-
-    Runtime requirement: the v2 Python worker speaks gRPC to the state
-    server, so ``grpcio``/``protobuf`` must be installed (they are NOT
-    in this container — tests skip; on a cluster with the standard
-    PySpark connect/streaming extras this runs as-is). Without them the
-    TWS driver worker exits at startup ("driver worker crashed")."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_min * 60 * 1_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._open = handle.getValueState("open", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            ts_all = []
-            for pdf in rows:
-                ts_all.append(pd.to_datetime(pdf["ts"]).astype("int64") // 1000)
-            ts = (
-                pd.concat(ts_all).sort_values()
-                if ts_all
-                else pd.Series([], dtype="int64")
-            )
-            start = last = n = None
-            if self._open.exists():
-                start, last, n = self._open.get()
-            closed = []
-            for t in ts:
-                t = int(t)
-                if start is None:
-                    start, last, n = t, t, 1
-                elif t - last > gap_us:
-                    closed.append((start, last, n))
-                    start, last, n = t, t, 1
-                else:
-                    last, n = t, n + 1
-            if start is not None:
-                self._open.update((start, last, n))
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id] * len(closed),
-                        "session_start": [
-                            pd.Timestamp(s, unit="us") for s, _, _ in closed
-                        ],
-                        "session_end": [
-                            pd.Timestamp(l, unit="us") for _, l, _ in closed
-                        ],
-                        "n_events": [c for _, _, c in closed],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

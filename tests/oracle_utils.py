@@ -28,7 +28,7 @@ TABLES = (
 def duck_connect(sf_dir: str):
     """DuckDB connection with every test table registered as a view —
     the one shared spelling of the oracle-side setup (conftest's duck
-    fixture, tools/time_gate.py, tools/verify_rotation.py)."""
+    fixture, tools/verify_rotation.py, perfbench)."""
     import duckdb
 
     con = duckdb.connect()

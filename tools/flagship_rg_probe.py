@@ -12,7 +12,8 @@ row-group sizing upstream, not a repartition-after-scan in the query,
 is the 100 TB lever.
 
 Usage: python tools/flagship_rg_probe.py [--cores N] [--variant rg32|single]
-Prints one line: {"variant", "cores", "median_s", "reps"}.
+(--cores defaults to the session's own core count). Times 5 reps with
+bench.measure and prints one line: {"variant", "cores", "median_s", "reps"}.
 """
 
 from __future__ import annotations
@@ -23,7 +24,6 @@ import os
 import shutil
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,40 +53,31 @@ def build_rg32(spark) -> str:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--variant", choices=["rg32", "single"], default="rg32")
     args = ap.parse_args()
 
+    import bench
     from nyc_traffic_insight_spark.session import get_spark
 
-    spark = get_spark(master=f"local[{args.cores}]")
+    spark = get_spark(master=f"local[{args.cores}]" if args.cores else None)
     from nyc_traffic_insight_spark.plans.flagship import flagship_volume_features
 
     sf_dir = build_rg32(spark) if args.variant == "rg32" else SF_BASE
 
-    def run():
-        flagship_volume_features(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+    def build():
+        return flagship_volume_features(spark, sf_dir)
 
-    spark.sparkContext.setJobDescription(
-        f"flagship rg probe {args.variant} c{args.cores}"
-    )
     for _ in range(4):  # cold-session JIT dominates the first runs
-        run()
-    reps = []
-    for _ in range(5):
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.perf_counter()
-        run()
-        reps.append(round(time.perf_counter() - t0, 3))
+        bench.consume(build())
+    walls = bench.measure(spark, f"flagship_rg_{args.variant}", build, 5)["walls"]
     print(
         json.dumps(
             {
                 "variant": args.variant,
-                "cores": args.cores,
-                "median_s": statistics.median(reps),
-                "reps": reps,
+                "cores": spark.sparkContext.defaultParallelism,
+                "median_s": round(statistics.median(walls), 3),
+                "reps": [round(w, 3) for w in walls],
             }
         )
     )

@@ -16,8 +16,7 @@ from nyc_traffic_insight_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(master=f"local[{cpus}]")
+    spark = get_spark()
     from tools.docs_decade_probe import build_emb_corpus
 
     import nyc_traffic_insight_spark.queries.embcurate as ec

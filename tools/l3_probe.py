@@ -3,7 +3,8 @@
 Replicates the sf0.1 embeddings 100x (jitter variant, deterministic —
 tools/docs_decade_probe.build_emb_corpus) to 200k vectors, where the
 scale-k index reaches m = 100 and the r16 third assignment level
-engages. Measures dedup_semantic median-of-3 noop-sink wall with
+engages. Measures dedup_semantic median-of-3 noop-sink wall through
+bench.measure with
 
 - L3 (current code: nearest label -> nearest mid-rep -> nearest
   sub-cell, 10 + 2*ceil(sqrt(m)) scored centroids per vector), and
@@ -27,16 +28,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from nyc_traffic_insight_spark.session import get_spark  # noqa: E402
-
-
-def median3(fn) -> float:
-    reps = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        fn()
-        reps.append(time.perf_counter() - t0)
-    return statistics.median(reps)
 
 
 def main() -> int:
@@ -45,55 +38,45 @@ def main() -> int:
     ap.add_argument("--skip-20k", action="store_true")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(master=f"local[{cpus}]")
+    spark = get_spark()
     from tools.docs_decade_probe import build_emb_corpus
 
     import nyc_traffic_insight_spark.queries.embcurate as ec
 
-    def consume(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def run(sf_dir):
-        consume(
-            ec.semdedup_frame(
-                ec._embs(spark, sf_dir),
-                ec._semdedup_index(spark, sf_dir),
-                ec._SEMDEDUP_THRESH,
-            )
+    def frame(sf_dir):
+        return ec.semdedup_frame(
+            ec._embs(spark, sf_dir),
+            ec._semdedup_index(spark, sf_dir),
+            ec._SEMDEDUP_THRESH,
         )
 
     results = {}
+
+    def timed(key, sf_dir):
+        m = bench.measure(spark, f"l3probe_{key}", lambda: frame(sf_dir))
+        results[key] = round(statistics.median(m["walls"]), 2)
+        print(f"{key}:", results[key], "s", flush=True)
+
     if not args.skip_20k:
         d20 = build_emb_corpus(spark, "jitter", 10)
-        spark.sparkContext.setJobDescription("l3probe: 20k (m=10, L2==L3)")
-        run(d20)  # warm the index artifact outside the timed reps
-        results["20k_m10"] = round(median3(lambda: run(d20)), 2)
-        print("20k (m=10):", results["20k_m10"], "s", flush=True)
+        bench.consume(frame(d20))  # warm the index artifact outside the timed reps
+        timed("20k_m10", d20)  # m = 10: L2 == L3
 
     d200 = build_emb_corpus(spark, "jitter", 100)
-    spark.sparkContext.setJobDescription("l3probe: 200k L3")
-    run(d200)  # warm artifact
-    results["200k_L3"] = round(median3(lambda: run(d200)), 2)
-    print("200k L3:", results["200k_L3"], "s", flush=True)
+    bench.consume(frame(d200))  # warm artifact
+    timed("200k_L3", d200)
 
     gate = ec._SEMDEDUP_L3_MIN_M
     ec._SEMDEDUP_L3_MIN_M = 10**9  # force the r15 two-level shape
     try:
-        spark.sparkContext.setJobDescription("l3probe: 200k L2 (r15 shape)")
-        results["200k_L2"] = round(median3(lambda: run(d200)), 2)
-        print("200k L2:", results["200k_L2"], "s", flush=True)
+        timed("200k_L2", d200)
     finally:
         ec._SEMDEDUP_L3_MIN_M = gate
 
     if args.oracle:
         from tests.oracle_utils import compare, duck_connect
 
-        got = ec.semdedup_frame(
-            ec._embs(spark, d200),
-            ec._semdedup_index(spark, d200),
-            ec._SEMDEDUP_THRESH,
-        ).toPandas()
+        got = frame(d200).toPandas()
         con = duck_connect(d200)
         try:
             t0 = time.perf_counter()

@@ -23,6 +23,8 @@ Caveats printed with the table:
     overhead amortizing, not magic. The signal is the flag column.
   - Shuffle bytes of 0 at both SFs means the plan moves no data
     (map-only or broadcast-only); the ratio is reported as "-".
+    Bytes are the median per rep of the query's own job groups
+    (bench.measure); a session without a UI reports them as "n/a".
 
 Usage:
   python tools/scaling_sweep.py [--lo /root/testdata/sf0.01]
@@ -43,12 +45,12 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402  (repo-root bench.py: HEADLINE + _exec_totals)
+import bench  # noqa: E402  (repo-root bench.py: HEADLINE + measure)
 from nyc_traffic_insight_spark.queries import load_all  # noqa: E402
 from nyc_traffic_insight_spark.session import (  # noqa: E402
     clear_session_caches,
@@ -60,23 +62,22 @@ def _sf_of(path: str) -> float:
     return float(os.path.basename(os.path.normpath(path)).replace("sf", ""))
 
 
-def _measure(spark, specs, names, sf_dir, reps, ui_url):
-    """Median wall + per-run shuffle-write bytes for each query at one SF."""
+def _bytes(n: int | None) -> str:
+    return "n/a" if n is None else f"{n:,}"
+
+
+def _measure(spark, specs, names, sf_dir, reps):
+    """Median wall + median per-rep shuffle-write bytes (None without a
+    UI) for each query at one SF."""
     out = {}
     for name in names:
-        walls = []
-        before = bench._settled_totals(spark, ui_url)
-        for _ in range(reps):
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.perf_counter()
-            bench.consume(specs[name].builder(spark, sf_dir))
-            walls.append(time.perf_counter() - t0)
-        after = bench._settled_totals(spark, ui_url)
+        m = bench.measure(
+            spark, name, lambda: specs[name].builder(spark, sf_dir), reps
+        )
+        b = m["shuffle_w"]
         out[name] = {
-            "wall": sorted(walls)[len(walls) // 2],
-            "bytes": max(
-                0, after["shuffle_write_bytes"] - before["shuffle_write_bytes"]
-            ) // reps,
+            "wall": statistics.median_high(m["walls"]),
+            "bytes": None if b is None else statistics.median_high(b),
         }
     return out
 
@@ -104,7 +105,6 @@ def main() -> int:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui_url = spark.sparkContext.uiWebUrl
     specs = load_all()
     names = args.only or list(bench.HEADLINE)
 
@@ -115,14 +115,16 @@ def main() -> int:
     for name in names:
         bench.consume(specs[name].builder(spark, warm))
 
-    lo = _measure(spark, specs, names, args.lo, args.reps, ui_url)
-    hi = _measure(spark, specs, names, args.hi, args.reps, ui_url)
+    lo = _measure(spark, specs, names, args.lo, args.reps)
+    hi = _measure(spark, specs, names, args.hi, args.reps)
 
     flagged = []
     rows = []
     for name in names:
         wall_ratio = hi[name]["wall"] / max(lo[name]["wall"], 1e-9)
-        if lo[name]["bytes"] > 0:
+        if lo[name]["bytes"] is None:
+            bytes_ratio = "n/a"  # no UI: walls only
+        elif lo[name]["bytes"] > 0:
             bytes_ratio = f"{hi[name]['bytes'] / lo[name]['bytes']:.1f}x"
         elif hi[name]["bytes"] > 0:
             bytes_ratio = "new"  # shuffle appeared only at the high SF
@@ -136,8 +138,8 @@ def main() -> int:
             flagged.append(name)
         rows.append(
             f"| {name} | {lo[name]['wall']:.3f} | {hi[name]['wall']:.3f} "
-            f"| {wall_ratio:.1f}x | {lo[name]['bytes']:,} "
-            f"| {hi[name]['bytes']:,} | {bytes_ratio} "
+            f"| {wall_ratio:.1f}x | {_bytes(lo[name]['bytes'])} "
+            f"| {_bytes(hi[name]['bytes'])} | {bytes_ratio} "
             f"| {'SUPER-LINEAR' if flag else 'ok'} |"
         )
 
