@@ -1,7 +1,6 @@
-"""Geo expression library (SURVEY.md §2.9 C1/C16/C17, §2.1 S6/S8).
+"""Geo expression library (SURVEY.md §2.9 C1/C17, §2.1 S6/S8).
 
 - C1  WKT POINT parse → (x, y) columns: JVM regexp, no UDF.
-- C16 GeoJSON Feature struct build → to_json: declarative struct.
 - C17 EPSG:2263 → EPSG:4326 reprojection: the reference's one genuine
   UDF (it uses pyproj; ``scripts/convert_traffic_csv_to_geojson_point.py:15-22``).
   pyproj is not available here, so the Lambert Conformal Conic (2SP)
@@ -31,21 +30,6 @@ def wkt_point_x(wkt: Column | str) -> Column:
 
 def wkt_point_y(wkt: Column | str) -> Column:
     return F.regexp_extract(wkt, _WKT_POINT_RE, 2).try_cast("double")
-
-
-def geojson_point_feature(
-    lon: Column, lat: Column, properties: Column
-) -> Column:
-    """C16: GeoJSON Feature struct (serialize with to_json; see
-    sources/geojson.py for the FeatureCollection sink)."""
-    return F.struct(
-        F.lit("Feature").alias("type"),
-        F.struct(
-            F.lit("Point").alias("type"),
-            F.array(lon, lat).alias("coordinates"),
-        ).alias("geometry"),
-        properties.alias("properties"),
-    )
 
 
 # ---------------------------------------------------------------- EPSG:2263

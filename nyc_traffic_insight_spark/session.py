@@ -31,6 +31,19 @@ DEFAULT_CPUS = os.environ.get(
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _mem_total_kb() -> int:
+    with open("/proc/meminfo") as f:
+        return next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+
+
+# A quarter of the host's memory, uncapped: a small heap on a large host
+# brings GC storms late in long sessions, a fixed large one is OOM-killed
+# on a small host once a second session runs beside it.
+DEFAULT_DRIVER_MEMORY = (
+    os.environ.get("SPARK_DRIVER_MEMORY") or f"{_mem_total_kb() // 1024 // 4}m"
+)
+
+
 def get_spark(
     app_name: str = "nyc-traffic-insight-spark",
     master: str | None = None,
@@ -52,14 +65,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode = one JVM doing all 32 threads' executor work; 8g
-        # (the r1 default) left >100 GiB of the box idle and produced
-        # GC storms late in long sessions — object-heavy aggregates
-        # (collect_set baskets) ran 5-8x slower after ~28 cached-cache
-        # queries than in a fresh session with identical plans and
-        # shuffle bytes (round-6 bench forensics). 24g matches what a
-        # per-executor heap would be on a real cluster node.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", DEFAULT_DRIVER_MEMORY)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver's testdata stores events.ts as TIMESTAMP(NANOS)

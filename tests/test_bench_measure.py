@@ -3,9 +3,12 @@ and probes.
 
 With a UI, each rep's bytes are the sums over its own ``<label>#build``
 and ``<label>#sink`` job groups, so two measurements of the same label in
-one session must read the same per-rep bytes (a collision between the
-calls' group keys would double the second call's bytes), and no job may
-run outside a group.  The status REST API needs a UI-enabled session,
+one fresh session must read the same per-rep bytes: a collision between
+the calls' group keys would double the second call's bytes, and a
+session cache filled inside rep 1 instead of in measure's own
+``<label>#warm`` rep would show as a larger first count
+(sim_search_ivf_topk's IVF centroids at sf0.01).  No job may run
+outside a group.  The status REST API needs a UI-enabled session,
 which the shared fixture session is not, so that half runs in a
 subprocess; without a UI the byte fields are None.
 """
@@ -17,15 +20,16 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from nyc_traffic_insight_spark.queries import load_all
 from tests.conftest import SF_SMOKE
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF_MID = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
 sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
-
-QUERY = "join_traffic_weather_boro"
 
 _CHILD = """
 import json, sys
@@ -33,7 +37,7 @@ sys.path.insert(0, sys.argv[1])
 import bench
 from nyc_traffic_insight_spark.queries import load_all
 from nyc_traffic_insight_spark.session import get_spark
-from perfbench.jobtrace import ungrouped_job_ids, untag
+from perfbench.jobtrace import ungrouped_job_ids
 
 spark = get_spark(
     app_name="ntis-measure-test", master="local[2]", shuffle_partitions=8,
@@ -42,9 +46,6 @@ spark = get_spark(
 )
 sc = spark.sparkContext
 build = lambda: load_all()[sys.argv[2]].builder(spark, sys.argv[3])
-sc.setJobGroup("warmup", "w")
-bench.consume(build())
-untag(sc)
 before = sorted(ungrouped_job_ids(sc))
 runs = [bench.measure(spark, sys.argv[2], build, reps=2) for _ in range(2)]
 after = sorted(ungrouped_job_ids(sc))
@@ -53,9 +54,17 @@ print(json.dumps({"runs": runs, "before": before, "after": after}))
 """
 
 
-def test_measure_attributes_bytes_per_rep_by_job_group():
+@pytest.mark.parametrize(
+    "query, sf_dir",
+    [
+        ("join_traffic_weather_boro", SF_SMOKE),
+        ("sim_search_ivf_topk", SF_MID),
+    ],
+    ids=["join_traffic_weather_boro", "sim_search_ivf_topk"],
+)
+def test_measure_attributes_bytes_per_rep_by_job_group(query, sf_dir):
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, ROOT, QUERY, SF_SMOKE],
+        [sys.executable, "-c", _CHILD, ROOT, query, sf_dir],
         capture_output=True, text=True, timeout=240, cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]

@@ -54,20 +54,32 @@ def test_checkpoint_dir_branch_matches_oracles(spark, duck, tmp_path):
 
 @pytest.mark.parametrize("env_cpus", [None, "3"])
 def test_default_cpus_follow_host(env_cpus):
-    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY")
+    }
     if env_cpus is not None:
         env["SPARK_GRAFT_CPUS"] = env_cpus
+        env["SPARK_DRIVER_MEMORY"] = f"{env_cpus}g"
     out = subprocess.run(
         [
             sys.executable,
             "-c",
-            "from nyc_traffic_insight_spark.session import DEFAULT_CPUS;"
-            "print(DEFAULT_CPUS)",
+            "from nyc_traffic_insight_spark.session import"
+            " DEFAULT_CPUS, DEFAULT_DRIVER_MEMORY;"
+            "print(DEFAULT_CPUS, DEFAULT_DRIVER_MEMORY)",
         ],
         cwd=_REPO,
         env=env,
         capture_output=True,
         text=True,
         check=True,
-    ).stdout.strip()
-    assert out == (env_cpus or str(len(os.sched_getaffinity(0))))
+    ).stdout.split()
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    assert out == (
+        [env_cpus, f"{env_cpus}g"]
+        if env_cpus
+        else [str(len(os.sched_getaffinity(0))), f"{mem_kb // 1024 // 4}m"]
+    )

@@ -9,7 +9,10 @@ box?" — a one-liner:
 
 Prints one line per headline query: byte delta (plan signal) alongside
 the wall-time ratio (noise context). Exit 1 if any query's shuffle
-bytes changed by >1% (a plan change — investigate), else 0.
+bytes changed by >1% (a plan change — investigate), else 0. Shuffle
+bytes depend on the core count, so two sidecars stamped with different
+``cpus`` are refused (exit 2); sidecars without the stamp compare as
+before.
 """
 
 from __future__ import annotations
@@ -22,8 +25,12 @@ def main() -> int:
     if len(sys.argv) != 3:
         print(__doc__)
         return 2
-    new = json.load(open(sys.argv[1]))["query_metrics"]
-    old = json.load(open(sys.argv[2]))["query_metrics"]
+    runs = [json.load(open(p)) for p in sys.argv[1:]]
+    cpus = [run.get("cpus") for run in runs]
+    if None not in cpus and cpus[0] != cpus[1]:
+        print(f"-- cpus {cpus[1]} -> {cpus[0]}: not comparable across hosts")
+        return 2
+    new, old = (run["query_metrics"] for run in runs)
     moved = 0
     for q in sorted(set(new) & set(old)):
         nb, ob = new[q]["shuffle_write_bytes"], old[q]["shuffle_write_bytes"]

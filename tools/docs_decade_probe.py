@@ -178,8 +178,6 @@ def ivf_cell_skew(spark, sf_dir: str) -> dict:
 
 def time_query(spark, name: str, sf_dir: str, reps: int) -> dict:
     spec = load_all()[name]
-    # warmup (codegen compile + session caches)
-    bench.consume(spec.builder(spark, sf_dir))
     m = bench.measure(spark, name, lambda: spec.builder(spark, sf_dir), reps)
     walls, b = m["walls"], m["shuffle_w"]
     return {

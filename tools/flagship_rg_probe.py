@@ -68,7 +68,9 @@ def main() -> int:
     def build():
         return flagship_volume_features(spark, sf_dir)
 
-    for _ in range(4):  # cold-session JIT dominates the first runs
+    # cold-session JIT dominates the first runs: three passes here plus
+    # measure's own warm rep
+    for _ in range(3):
         bench.consume(build())
     walls = bench.measure(spark, f"flagship_rg_{args.variant}", build, 5)["walls"]
     print(

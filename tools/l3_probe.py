@@ -59,11 +59,9 @@ def main() -> int:
 
     if not args.skip_20k:
         d20 = build_emb_corpus(spark, "jitter", 10)
-        bench.consume(frame(d20))  # warm the index artifact outside the timed reps
         timed("20k_m10", d20)  # m = 10: L2 == L3
 
     d200 = build_emb_corpus(spark, "jitter", 100)
-    bench.consume(frame(d200))  # warm artifact
     timed("200k_L3", d200)
 
     gate = ec._SEMDEDUP_L3_MIN_M

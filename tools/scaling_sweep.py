@@ -108,13 +108,6 @@ def main() -> int:
     specs = load_all()
     names = args.only or list(bench.HEADLINE)
 
-    # Warmup: codegen + JIT at the smallest SF, exactly like bench.py.
-    warm = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm):
-        warm = args.lo
-    for name in names:
-        bench.consume(specs[name].builder(spark, warm))
-
     lo = _measure(spark, specs, names, args.lo, args.reps)
     hi = _measure(spark, specs, names, args.hi, args.reps)
 
