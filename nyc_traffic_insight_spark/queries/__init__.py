@@ -27,7 +27,7 @@ Conventions (hash-compare survival rules):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -75,93 +75,13 @@ def register(
     return deco
 
 
-# Registration-order rotation (VERDICT.md rounds 2-15). The driver's
-# sf0.01 correctness gate walks REGISTRY front-to-back with a
-# ~50-query budget (CORRECTNESS_r04-r15 each carried exactly 50
-# rows). Round-16 ordering (changed/new entries outrank stale
-# refresh, the standing convention):
-#   1. the 14 queries whose code changed in r16 (the from_json
-#      index-delivery rework across the ANN/PQ/D4 tiers; the widened
-#      fuzzy-key scan; the DSIR window totals; the retention
-#      clone-collapse; the chunked copurchase expansion) — all
-#      pre-verified cross-engine this round;
-#   2. the three r15 rewrites that landed AFTER the r15 rotation
-#      froze and therefore have no driver-side oracle row for their
-#      current code (VERDICT r15 "Next round" #1): bpe_train_merges,
-#      bpe_encode_top_tokens, sketch_qdigest (join_fuzzy_key, the
-#      fourth, already fronts with the changed set);
-#   3. 33 of the 48-query r10-stale block, registration order
-#      (win_roll_mean_3 ... sketch_histogram — bpe_train_merges /
-#      bpe_encode_top_tokens already front in group 2).
-# 14 + 3 + 33 = 50 fronted exactly; the r10 tail
-# (agg_grouping_sets ... make_timestamp_parts, 13 entries) fronts
-# next round. Everything else keeps standing r11+ evidence and
-# registers last.
-_CHECK_FIRST = [
-    # 1. changed in r16
-    "qa_dedup_retention",
-    "report_copurchase_pairs",
-    "join_fuzzy_key",
-    "text_dsir_weights",
-    "pipeline_ann_ivfpq",
-    "sim_search_ivf_topk",
-    "qa_ivf_index_audit",
-    "emb_pq_codes",
-    "sim_search_pq_adc",
-    "qa_pq_distortion",
-    "sim_search_lsh_buckets",
-    "dedup_semantic",
-    "emb_prototypes_filter",
-    "pipeline_d4_curation",
-    # 2. r15 late rewrites with no driver row for the current code
-    "bpe_train_merges",
-    "bpe_encode_top_tokens",
-    "sketch_qdigest",
-    # 3. r10-stale block, registration order
-    "win_roll_mean_3",
-    "win_time_split",
-    "win_sliding_lookback",
-    "win_lag_series",
-    "win_ranking",
-    "text_decontaminate",
-    "shard_pack_greedy",
-    "sample_temperature_mix",
-    "text_repetition_filter",
-    "pipeline_pretrain_corpus",
-    "dedup_incremental_batch",
-    "vocab_top_ngrams",
-    "ml_linear_regression",
-    "ml_random_forest",
-    "ml_gbt",
-    "ml_propensity_model",
-    "geo_reproject_forward",
-    "geo_reproject_roundtrip",
-    "agg_null_counts",
-    "agg_count",
-    "agg_distinct_years",
-    "agg_corr_matrix",
-    "agg_regression_metrics",
-    "agg_group_mean",
-    "pivot_onehot",
-    "onehot_flags",
-    "agg_feature_importance_sort",
-    "agg_rollup",
-    "agg_cube",
-    "agg_count_distinct",
-    "agg_quantiles",
-    "ols_closed_form",
-    "sketch_histogram",
-]
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every catalog module (side effect: fills REGISTRY), then
-    reorder so the stalest / most-recently-changed queries register
-    first (see ``_CHECK_FIRST``).
+    reorder it into the check rotation (``rotation.order``).
 
     REGISTRY is insertion-ordered and the driver's correctness gate
     walks it front-to-back with a ~50-query budget, so front placement
-    decides what gets re-verified this round.
+    decides what gets re-verified.
     """
     from nyc_traffic_insight_spark.queries import (  # noqa: F401
         windows,
@@ -184,25 +104,11 @@ def load_all() -> dict[str, QuerySpec]:
     # so cross-module fragments and late-defined constants resolve
     for n, s in list(REGISTRY.items()):
         if callable(s.oracle):
-            REGISTRY[n] = QuerySpec(
-                name=s.name,
-                builder=s.builder,
-                oracle=s.oracle(),
-                survey=s.survey,
-            )
+            REGISTRY[n] = replace(s, oracle=s.oracle())
 
-    unknown = set(_CHECK_FIRST) - REGISTRY.keys()
-    if unknown:
-        # a typo here would silently cost the query its driver-evidence
-        # slot (the whole point of the rotation) — fail loudly instead,
-        # and with a real raise: a bare assert is stripped under
-        # `python -O`, losing this diagnostic (ADVICE r8)
-        raise ValueError(
-            f"_CHECK_FIRST names not in registry: {sorted(unknown)}"
-        )
-    front = {n: REGISTRY[n] for n in _CHECK_FIRST}
-    rest = {n: s for n, s in REGISTRY.items() if n not in front}
+    from nyc_traffic_insight_spark.queries import rotation
+
+    specs = {n: REGISTRY[n] for n in rotation.order(REGISTRY)}
     REGISTRY.clear()
-    REGISTRY.update(front)
-    REGISTRY.update(rest)
+    REGISTRY.update(specs)
     return REGISTRY

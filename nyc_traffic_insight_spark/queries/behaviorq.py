@@ -16,8 +16,6 @@ otherwise flip lag/ntile results between engines silently.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -642,15 +640,6 @@ def report_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_r16_copurchase_chunks.py at the default and at a
     # forced cap=4), wall-neutral at sf0.1 (interleaved medians
     # 1.09 ≈ 1.09 s).
-    #
-    # NTIS_COPURCHASE_REBALANCE=1 additionally redistributes the
-    # chunk-pair rows before expansion so one hot basket's (m/CAP)²
-    # chunk pairs spread across the cluster — the documented
-    # production default at clone-heavy scale (hot-basket probe,
-    # OPTIMIZATION_r16.md: a 20k-part basket finished 183 s spread vs
-    # >400 s serial). Local default OFF: the extra exchange of every
-    # basket row costs +0.7 s at sf0.1 where no hot basket exists,
-    # and the driver's bench must stay comparable across core counts.
     cap = _BASKET_CHUNK
     nch = f"CAST(ceil(size(parts) / {cap}.0) AS INT)"
     chunk_pairs = F.expr(
@@ -670,12 +659,6 @@ def report_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"slice(parts, cp.cj * {cap} + 1, {cap}))"
         ).alias("pb"),
     )
-    if os.environ.get("NTIS_COPURCHASE_REBALANCE"):
-        # deterministic key with far more distinct values than
-        # partitions (guide §2.5) — never rand()
-        chunked = chunked.repartition(
-            F.col("l_orderkey"), F.col("ci"), F.col("cj")
-        )
     pair_structs = F.expr(
         "CASE WHEN pb IS NULL THEN "
         "flatten(transform(pa, (x, i) -> "

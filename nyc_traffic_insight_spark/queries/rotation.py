@@ -1,0 +1,108 @@
+"""The check rotation, derived instead of hand-listed.
+
+The sf0.01 correctness gate walks REGISTRY front-to-back with a
+~50-query budget, so ``load_all()`` orders the registry by ``order()``:
+queries whose code changed since their last PASS first.
+``rotation.json`` maps each query to ``[round, fingerprint]`` of its
+latest PASS row in a round's ``CORRECTNESS_rNN.json``;
+``tools/rotation.py record CORRECTNESS_rNN.json`` refreshes it when a
+round's correctness file lands.
+"""
+
+import ast
+import hashlib
+import inspect
+import json
+import os
+import sys
+
+MANIFEST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "rotation.json")
+_PKG = __name__.split(".")[0]
+CURRENT: dict[str, str] = {}  # the loaded registry's fingerprints, once per process
+
+
+def order(registry: dict) -> list[str]:
+    """Query names in rotation order. Entries whose fingerprint differs
+    from the manifest, or that have no manifest entry, come first, then
+    the unchanged ones; each group by recorded round ascending, ties in
+    registry order (``sorted`` is stable)."""
+    if not CURRENT:
+        CURRENT.update(fingerprints(registry))
+    with open(MANIFEST) as f:
+        passed = json.load(f)
+    same = {n for n, (_, fp) in passed.items() if CURRENT.get(n) == fp}
+    return sorted(registry, key=lambda n: (n in same, passed.get(n, [0])[0]))
+
+
+def fingerprints(registry: dict) -> dict[str, str]:
+    """Hash each query's package-source closure and rendered oracle text.
+
+    The closure is the source of every package function and
+    module-level binding the builder reaches: names its code (nested
+    code included) reads through its own globals, through package
+    modules bound there or imported inside a function, and string
+    constants that name a registered query (``REGISTRY["…"].builder``).
+    A class counts by its own source. Parts are keyed by qualified name
+    and sorted, so neither the hash seed nor the checkout path enters
+    the hash. Source, not optimized plans: a plan needs a session, data
+    and the builders' eager jobs, and embeds session identity (RDD ids,
+    PID-scoped paths, MLlib UIDs)."""
+    defs: dict[str, dict] = {}  # module -> {name: source | (module, name)}
+    memo: dict[int, tuple[set[str], list]] = {}  # id(function) -> (parts, deps)
+
+    def source(mod: str, name: str) -> str | None:
+        """Source of the module-level statements that bind ``name``."""
+        if mod not in defs:
+            text = inspect.getsource(sys.modules[mod])
+            lines, d = text.splitlines(True), defs.setdefault(mod, {})
+            for st in ast.parse(text).body:
+                if isinstance(st, ast.ImportFrom) and str(st.module).startswith(_PKG):
+                    d.update({a.asname or a.name: (st.module, a.name) for a in st.names})
+                stored = (x for x in ast.walk(st) if isinstance(x, ast.Name))
+                bound = [st.name] if hasattr(st, "name") else [  # def or class
+                    x.id for x in stored if isinstance(x.ctx, ast.Store)]
+                for n in bound:
+                    prior = d[n] if isinstance(d.get(n), str) else ""
+                    d[n] = prior + "".join(lines[st.lineno - 1 : st.end_lineno])
+        s = defs[mod].get(name)
+        return source(*s) if isinstance(s, tuple) else s
+
+    def node(fn) -> tuple[set[str], list]:
+        """One function's own parts and the package functions it reaches."""
+        if id(fn) not in memo:
+            codes = [fn.__code__]
+            for co in codes:  # grows by each nested code object
+                codes += [c for c in co.co_consts if inspect.iscode(c)]
+            names = {n for co in codes for n in co.co_names}
+            strs = {c for co in codes for c in co.co_consts if isinstance(c, str)}
+            mod, qual = fn.__module__, fn.__qualname__
+            parts = {f"{mod}.{qual}\n{source(mod, qual) or inspect.getsource(fn)}"}
+            deps = [registry[c].builder for c in strs & registry.keys()]
+            mods = [sys.modules[n] for n in {mod} | names
+                    if n.startswith(_PKG) and n in sys.modules]
+            for m in mods:  # grows by each package module a name binds
+                for n in names & vars(m).keys():
+                    v = vars(m)[n]
+                    if inspect.ismodule(v):
+                        if v.__name__.startswith(_PKG) and v not in mods:
+                            mods.append(v)
+                    elif inspect.isfunction(v):
+                        if str(v.__module__).startswith(_PKG):
+                            deps.append(v)
+                    elif (text := source(m.__name__, n)) is not None:
+                        parts.add(f"{m.__name__}.{n}\n{text}")
+            memo[id(fn)] = parts, deps
+        return memo[id(fn)]
+
+    out = {}
+    for name, spec in registry.items():
+        seen, todo, parts = set(), [spec.builder], {str(spec.oracle)}
+        while todo:
+            fn = todo.pop()
+            if id(fn) not in seen:
+                seen.add(id(fn))
+                p, d = node(fn)
+                parts |= p
+                todo += d
+        out[name] = hashlib.sha256("\0".join(sorted(parts)).encode()).hexdigest()[:16]
+    return out

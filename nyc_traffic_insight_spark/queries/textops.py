@@ -988,46 +988,14 @@ def _retention_grouped(
     )
 
 
-def _retention_frame(
-    spark: SparkSession, sh: DataFrame, nd: DataFrame
-) -> DataFrame:
-    """The retention machine over an exploded (doc_id, s) shingle
-    frame and a one-row (n_docs) frame — factored so the synthetic
-    threshold-separation test can feed controlled-Jaccard corpora."""
-    # the _ngram_jaccard_pairs joins with the integer triple kept
-    # (that machine emits the jaccard double and pre-filters at 0.5;
-    # this one needs (c, n1, n2) for the exact integer threshold
-    # tests — same join graph, deliberately not consolidated so the
-    # registered baseline's plan stays untouched)
-    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2")
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    ca, cb = cnt.alias("ca"), cnt.alias("cb")
-    pc = (
-        common.join(ca, F.col("doc1") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc2") == F.col("cb.doc_id"))
-        .select("doc1", "doc2", "c", F.col("ca.n").alias("n1"), F.col("cb.n").alias("n2"))
-    )
-    return _retention_tail(spark, pc, nd)
-
-
 def _retention_tail(
     spark: SparkSession, pc: DataFrame, nd: DataFrame
 ) -> DataFrame:
     """Threshold fan-out + rollup over a (doc1, doc2, c, n1, n2)
-    integer pair frame — shared by the exact machine above and the
-    banded sibling (r15), so the two retention curves differ ONLY in
-    where their pairs come from."""
+    integer pair frame — shared by the banded sibling (r15) and the
+    doc-level reference machine in tests/test_dedup_retention.py, so
+    the two retention curves differ ONLY in where their pairs come
+    from."""
     # in-row threshold fan-out: each pair explodes to the thresholds
     # it passes (10c >= t*(n1+n2-c), pure integers)
     union_sz = F.col("n1") + F.col("n2") - F.col("c")

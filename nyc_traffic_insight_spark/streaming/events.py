@@ -67,11 +67,6 @@ def sliding_counts(events: DataFrame, watermark: str | None = None) -> DataFrame
     )
 
 
-def dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming dropDuplicates on event_id with watermark-bounded state."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
-
-
 def read_event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-source stream: new parquet files under source_dir become
     micro-batches (maxFilesPerTrigger caps per-batch work — the
@@ -80,25 +75,6 @@ def read_event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
         spark.readStream.schema(EVENTS)
         .option("maxFilesPerTrigger", 4)
         .parquet(source_dir)
-    )
-
-
-def run_tumbling_stream(
-    spark: SparkSession, source_dir: str, checkpoint_dir: str, out_dir: str
-) -> None:
-    """End-to-end streaming job, availableNow trigger (process whatever
-    is there, then stop — deterministic for tests; swap for continuous
-    triggers in production)."""
-    stream = read_event_stream(spark, source_dir)
-    agg = tumbling_counts(stream, watermark="2 hours")
-    (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
     )
 
 
@@ -135,97 +111,6 @@ def run_throttled_ingest(
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
-    )
-
-
-# ------------------------------------------------ custom stateful operator
-
-SESSION_GAP_MIN = 30
-
-SESSION_SCHEMA = (
-    "user_id LONG, session_start TIMESTAMP, session_end TIMESTAMP, "
-    "n_events LONG"
-)
-_STATE_SCHEMA = "start LONG, last LONG, n LONG"  # open session, micros
-
-
-def session_windows(events: DataFrame) -> DataFrame:
-    """Declarative streaming sessionization: the built-in
-    session_window gap-merges per user. session end here is
-    last_event + gap (Spark's session_window semantics), vs max(ts) in
-    the batch gaps-and-islands form (queries/streamingq.py)."""
-    return (
-        events.withWatermark("ts", "2 hours")
-        .groupBy("user_id", F.session_window("ts", f"{SESSION_GAP_MIN} minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def sessionize_stateful(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
-    """Custom stateful sessionization via applyInPandasWithState — the
-    escape hatch for operators session_window can't express (here:
-    emitting max(ts) as the session end, matching the reference-shaped
-    batch form, plus arbitrary per-session logic).
-
-    Per user_id the state holds the open session (start, last, count)
-    as an Arrow-typed tuple; each micro-batch folds its rows in
-    event-time order, emits every session closed by a > gap jump, and
-    leaves the trailing open session in state (bounded: one tuple per
-    active user). Works identically under availableNow (tests) and
-    continuous triggers.
-    """
-    import pandas as pd  # executor-side import
-
-    gap_us = gap_min * 60 * 1_000_000
-
-    def fn(key, pdfs, state):
-        (user_id,) = key
-        open_sess = state.get if state.exists else None
-        ts_all = []
-        for pdf in pdfs:
-            ts_all.append(pd.to_datetime(pdf["ts"]).astype("int64") // 1000)
-        ts = pd.concat(ts_all).sort_values() if ts_all else pd.Series([], dtype="int64")
-
-        closed = []
-        start = last = n = None
-        if open_sess is not None:
-            start, last, n = open_sess
-        for t in ts:
-            t = int(t)
-            if start is None:
-                start, last, n = t, t, 1
-            elif t - last > gap_us:
-                closed.append((start, last, n))
-                start, last, n = t, t, 1
-            else:
-                last, n = t, n + 1
-        if start is not None:
-            state.update((start, last, n))
-
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in closed],
-                    "session_end": [pd.Timestamp(l, unit="us") for _, l, _ in closed],
-                    "n_events": [c for _, _, c in closed],
-                }
-            )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -267,15 +152,6 @@ def run_upsert_stream(
         .start()
         .awaitTermination()
     )
-
-
-def enrich_with_static(stream: DataFrame, dim: DataFrame) -> DataFrame:
-    """Stream-static join: each micro-batch joins the (broadcastable)
-    dimension as of that batch — the standard enrich pattern (the
-    engine's holiday/coordinate dims would join a live event stream
-    exactly like this). No watermark needed: the static side is not
-    stateful."""
-    return stream.join(F.broadcast(dim), "event_type", "left")
 
 
 def correlate_streams(clicks: DataFrame, purchases: DataFrame) -> DataFrame:

@@ -74,19 +74,118 @@ def test_samplingq_imports_standalone():
     assert r.returncode == 0, r.stderr[-2000:]
 
 
-def test_rotation_front_names_all_exist():
-    """load_all() raises a loud ValueError for _CHECK_FIRST names
-    missing from the registry, so a typo cannot quietly drop a query
-    from the driver's check rotation (the evidence-debt failure mode
-    VERDICT r5 #1 was about). This test double-checks that raise path
-    stays unreachable on the committed list — and pins no duplicates,
-    which load_all does NOT police."""
-    from nyc_traffic_insight_spark.queries import _CHECK_FIRST, load_all
+def test_rotation_order_rule(tmp_path, monkeypatch):
+    """Changed or unrecorded entries first, then unchanged ones; each
+    group by recorded round ascending, ties in registry order."""
+    import json
+
+    from nyc_traffic_insight_spark.queries import rotation
+
+    manifest = {
+        "a": [12, "fa"], "b": [10, "old"], "c": [12, "fc"],
+        "d": [11, "fd"], "e": [12, "old"], "g": [9, None],
+    }
+    (tmp_path / "rotation.json").write_text(json.dumps(manifest))
+    monkeypatch.setattr(rotation, "MANIFEST", str(tmp_path / "rotation.json"))
+    monkeypatch.setattr(rotation, "CURRENT", {n: f"f{n}" for n in "abcdefg"})
+    order = rotation.order(dict.fromkeys("abcdefg"))
+    assert order == ["f", "g", "b", "e", "d", "a", "c"]
+
+
+def test_load_all_is_the_rotation_order():
+    import json
+
+    from nyc_traffic_insight_spark.queries import load_all, rotation
 
     reg = load_all()
-    missing = [n for n in _CHECK_FIRST if n not in reg]
-    assert not missing, f"_CHECK_FIRST names not in registry: {missing}"
-    assert len(set(_CHECK_FIRST)) == len(_CHECK_FIRST), "duplicate rotation names"
+    with open(rotation.MANIFEST) as f:
+        manifest = json.load(f)
+    rank = [
+        (manifest.get(n, [0, None])[1] == rotation.CURRENT.get(n),
+         manifest.get(n, [0])[0])
+        for n in reg
+    ]
+    assert rank == sorted(rank)
+
+
+def test_rotation_manifest_names_registered_queries():
+    """A manifest entry for a name the registry lacks (a typo, or a
+    query renamed without re-recording) would never front anything."""
+    import json
+
+    from nyc_traffic_insight_spark.queries import load_all, rotation
+
+    with open(rotation.MANIFEST) as f:
+        unknown = set(json.load(f)) - set(load_all())
+    assert not unknown, f"rotation.json names unregistered queries: {unknown}"
+
+
+def _stub(spark, sf_dir):
+    raise AssertionError("fingerprinted, never called")
+
+
+@pytest.mark.parametrize(
+    "patch, reacher",
+    [
+        ("textops._wide_table", "text_perplexity_proxy"),
+        ("events.tumbling_counts", "stream_tumbling_counts"),
+        ("REGISTRY.sim_search_bruteforce_topk", "sim_search_ivf_kmeans"),
+    ],
+)
+def test_fingerprint_follows_reached_code(monkeypatch, patch, reacher):
+    """Through a module global, a function-local import and a
+    ``REGISTRY["…"].builder`` string, respectively."""
+    from dataclasses import replace
+
+    from nyc_traffic_insight_spark.queries import load_all, rotation, textops
+    from nyc_traffic_insight_spark.streaming import events
+
+    reg = load_all()
+    before = rotation.fingerprints(reg)
+    owner, attr = patch.split(".")
+    if owner == "REGISTRY":
+        monkeypatch.setitem(reg, attr, replace(reg[attr], builder=_stub))
+    else:
+        monkeypatch.setattr({"textops": textops, "events": events}[owner], attr, _stub)
+    after = rotation.fingerprints(reg)
+    assert after[reacher] != before[reacher]
+    assert after["agg_count"] == before["agg_count"]
+
+
+def test_fingerprints_ignore_hash_seed_and_checkout_path(tmp_path):
+    import json
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    from nyc_traffic_insight_spark.queries import load_all
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copytree(
+        os.path.join(root, "nyc_traffic_insight_spark"),
+        tmp_path / "nyc_traffic_insight_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    code = (
+        "import json, nyc_traffic_insight_spark as p\n"
+        "from nyc_traffic_insight_spark.queries import load_all, rotation\n"
+        "load_all()\n"
+        "print(json.dumps([p.__file__, rotation.CURRENT]))"
+    )
+    runs = []
+    for cwd, seed in ((root, "1"), (tmp_path, "2")):
+        env = dict(os.environ, PYTHONHASHSEED=seed, PYTHONPATH="")
+        r = subprocess.run(
+            [sys.executable, "-c", code], cwd=cwd, env=env,
+            capture_output=True, text=True, timeout=120,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        runs.append(json.loads(r.stdout.splitlines()[-1]))
+    (path_a, fp_a), (path_b, fp_b) = runs
+    assert path_b.startswith(str(tmp_path)) and not path_a.startswith(str(tmp_path))
+    assert fp_a == fp_b
+    assert len(fp_a) == len(load_all())
 
 
 def test_duck_connect_skips_directory_without_part_files(tmp_path):

@@ -13,9 +13,40 @@ check of the integer cross-multiplication predicate.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 from tests.oracle_utils import compare, duck_connect
+
+
+def _retention_frame(spark, sh, nd):
+    """The doc-level retention machine over an exploded (doc_id, s)
+    shingle frame and a one-row (n_docs) frame: the reference the
+    registered clone-collapsed path (tests/test_r16_retention_grouped.py)
+    is compared against, and the entry point the synthetic
+    threshold-separation test feeds controlled-Jaccard corpora."""
+    from nyc_traffic_insight_spark.queries.textops import _retention_tail
+
+    cnt = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = sh.alias("a"), sh.alias("b")
+    common = (
+        a.join(
+            b,
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2")
+        )
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    ca, cb = cnt.alias("ca"), cnt.alias("cb")
+    pc = (
+        common.join(ca, F.col("doc1") == F.col("ca.doc_id"))
+        .join(cb, F.col("doc2") == F.col("cb.doc_id"))
+        .select("doc1", "doc2", "c", F.col("ca.n").alias("n1"), F.col("cb.n").alias("n2"))
+    )
+    return _retention_tail(spark, pc, nd)
 
 
 @pytest.fixture(scope="module")
@@ -68,11 +99,6 @@ def test_retention_synthetic_threshold_separation(spark):
     must drop exactly one removal as each threshold passes above a
     pair's Jaccard — the live branch the parquet fixture (mostly
     exact dups) cannot exercise."""
-    from nyc_traffic_insight_spark.queries.textops import (
-        _retention_frame,
-    )
-    from pyspark.sql import functions as F
-
     base = [f"w{i}" for i in range(20)]  # 18 distinct shingles
     rows = []
     rows += _shingle_rows(1, base)

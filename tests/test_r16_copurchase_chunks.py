@@ -8,13 +8,10 @@ per generated row; the sorted+deduped basket makes every cross-chunk
 (ci < cj) pair automatically ordered. These tests pin multiset
 equivalence of the pair expansion at the default chunk size (every
 sf-fixture basket takes the single (0,0) row) and at a forced tiny cap
-that exercises the diagonal/off-diagonal split on real data, plus the
-NTIS_COPURCHASE_REBALANCE spreading exchange.
+that exercises the diagonal/off-diagonal split on real data.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F, Window
@@ -78,15 +75,3 @@ def test_chunked_matches_at_forced_tiny_cap(spark, monkeypatch):
     assert _rows(bq.report_copurchase_pairs(spark, SF_SMOKE)) == _rows(
         _old_shape(spark, SF_SMOKE)
     )
-
-
-def test_chunked_matches_under_rebalance(spark, monkeypatch):
-    """The spreading exchange relocates rows only — same results."""
-    import nyc_traffic_insight_spark.queries.behaviorq as bq
-
-    monkeypatch.setenv("NTIS_COPURCHASE_REBALANCE", "1")
-    monkeypatch.setattr(bq, "_BASKET_CHUNK", 4)
-    assert _rows(bq.report_copurchase_pairs(spark, SF_SMOKE)) == _rows(
-        _old_shape(spark, SF_SMOKE)
-    )
-    assert "NTIS_COPURCHASE_REBALANCE" in os.environ  # the gate engaged

@@ -23,6 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from tests.test_dedup_retention import _retention_frame
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -52,7 +53,7 @@ def _both(spark, d):
     exact = sorted(
         map(
             tuple,
-            t._retention_frame(
+            _retention_frame(
                 spark,
                 sets.select("doc_id", F.explode("sh").alias("s")),
                 nd,
@@ -118,7 +119,7 @@ def test_grouped_matches_registered_query(spark):
     exact = sorted(
         map(
             tuple,
-            t._retention_frame(
+            _retention_frame(
                 spark,
                 ds.select("doc_id", F.explode("sh").alias("s")),
                 nd,

@@ -15,11 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_traffic_insight_spark.sources import load_table
-from nyc_traffic_insight_spark.streaming.events import (
-    dedup_events,
-    run_tumbling_stream,
-    tumbling_counts,
-)
 from tests.conftest import SF_SMOKE
 
 
@@ -31,140 +26,6 @@ def source_dir(spark, tmp_path):
     load_table(spark, SF_SMOKE, "events").write.parquet(src)
     yield src
     shutil.rmtree(src, ignore_errors=True)
-
-
-def test_streaming_matches_batch(spark, tmp_path, source_dir):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    run_tumbling_stream(spark, source_dir, ckpt, out)
-
-    got = spark.read.parquet(out)
-    batch = tumbling_counts(load_table(spark, SF_SMOKE, "events"))
-
-    # Append mode emits only windows the 2h watermark has closed; the
-    # final (still-open) windows stay in state. Everything emitted must
-    # match the batch result exactly, and nearly all windows close.
-    emitted = {tuple(r) for r in got.collect()}
-    full = {tuple(r) for r in batch.collect()}
-    assert emitted <= full
-    assert len(emitted) >= len(full) - 10
-    assert len(emitted) > 0
-
-
-def test_streaming_is_incremental_and_resumes(spark, tmp_path, source_dir):
-    # Same job, run twice against the same checkpoint: the second run
-    # sees no new files and must emit nothing new (exactly-once sink).
-    out = str(tmp_path / "out2")
-    ckpt = str(tmp_path / "ckpt2")
-    run_tumbling_stream(spark, source_dir, ckpt, out)
-    n1 = spark.read.parquet(out).count()
-    run_tumbling_stream(spark, source_dir, ckpt, out)
-    n2 = spark.read.parquet(out).count()
-    assert n1 == n2 > 0
-
-
-def test_streaming_dedup(spark, tmp_path, source_dir):
-    # duplicate every source file by copying it alongside itself
-    dup = str(tmp_path / "dup")
-    ev = spark.read.parquet(source_dir)
-    ev.unionAll(ev).write.parquet(dup)
-
-    stream = (
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 4).parquet(dup)
-    )
-    out = str(tmp_path / "ddout")
-    (
-        dedup_events(stream, watermark="1 hour")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ddckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    got = spark.read.parquet(out)
-    n_src = ev.select("event_id").distinct().count()
-    assert got.count() == got.select("event_id").distinct().count()
-    # at-most-one per id, and the overwhelming majority survive the
-    # watermark (late duplicates beyond 1h may be dropped entirely)
-    assert got.count() >= int(n_src * 0.9)
-
-
-def test_stateful_sessionization_matches_batch(spark, tmp_path, source_dir):
-    # applyInPandasWithState sessionizer vs the oracle-checked batch
-    # gaps-and-islands form: every CLOSED session emitted by the stream
-    # must appear identically (same start, end=max ts, count) in batch.
-    from nyc_traffic_insight_spark.queries import load_all
-    from nyc_traffic_insight_spark.streaming.events import sessionize_stateful
-
-    ev = spark.read.parquet(source_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(source_dir)
-    )
-    out = str(tmp_path / "sess_out")
-    (
-        sessionize_stateful(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    got = spark.read.parquet(out)
-    emitted = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in got.collect()
-    }
-
-    batch = load_all()["stream_sessionization"].builder(spark, SF_SMOKE)
-    full = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in batch.collect()
-    }
-    assert emitted, "stream emitted no closed sessions"
-    assert emitted <= full
-    # only the trailing open session per user stays in state
-    n_users = spark.read.parquet(source_dir).select("user_id").distinct().count()
-    assert len(emitted) >= len(full) - n_users
-
-
-def test_session_window_declarative(spark, tmp_path, source_dir):
-    # built-in session_window streaming run; session end is
-    # last_event + gap by definition, so compare starts and counts.
-    from nyc_traffic_insight_spark.queries import load_all
-    from nyc_traffic_insight_spark.streaming.events import session_windows
-
-    ev = spark.read.parquet(source_dir)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-    out = str(tmp_path / "sw_out")
-    (
-        session_windows(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "sw_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    got = spark.read.parquet(out)
-    emitted = {
-        (r["user_id"], r["session_start"], r["n_events"]) for r in got.collect()
-    }
-    batch = load_all()["stream_sessionization"].builder(spark, SF_SMOKE)
-    full = {
-        (r["user_id"], r["session_start"], r["n_events"]) for r in batch.collect()
-    }
-    assert emitted and emitted <= full
 
 
 def test_foreachbatch_upsert_is_idempotent(spark, tmp_path, source_dir):
@@ -206,25 +67,6 @@ def _run_stream_to_parquet(df, tmp_path, tag):
         .awaitTermination()
     )
     return out
-
-
-def test_stream_static_enrich(spark, tmp_path, source_dir):
-    from nyc_traffic_insight_spark.streaming.events import enrich_with_static
-
-    ev = spark.read.parquet(source_dir)
-    dim = ev.select("event_type").distinct().withColumn(
-        "type_id", F.crc32("event_type")
-    )
-    stream = (
-        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 4).parquet(source_dir)
-    )
-    out = _run_stream_to_parquet(enrich_with_static(stream, dim), tmp_path, "enrich")
-    got = spark.read.parquet(out)
-    assert got.count() == ev.count()  # left join: every event enriched
-    assert got.filter(F.col("type_id").isNull()).count() == 0
-
-    want = ev.join(dim, "event_type", "left")
-    assert {tuple(r) for r in got.collect()} == {tuple(r) for r in want.collect()}
 
 
 def test_stream_stream_join_matches_batch(spark, tmp_path, source_dir):

@@ -1,14 +1,16 @@
 """Driver-style local verification of the catalog.
 
-Runs each registered query (in registry order, so the ``_CHECK_FIRST``
-rotation comes first) the way the driver does at sf=0.01 — build the
-Spark DataFrame and execute every partition (``toPandas``), run the
-DuckDB oracle on the same parquet tables, compare row count + column
-names + order-insensitive values — and prints one PASS/FAIL/NO_ORACLE
-line per query with the Spark and oracle walls. The 20 slowest queries
-(both sides) follow on stderr: the budget read for the driver's
-front-of-registry gate window, and the triage step before chasing a
-slow-looking sweep wall (only ``spark=`` is engine time).
+Runs each registered query in registry order, which is the derived
+check rotation (``queries/rotation.py``: queries changed since their
+last correctness PASS first), the way the sf=0.01 correctness gate
+does — build the Spark DataFrame and execute every partition
+(``toPandas``), run the DuckDB oracle on the same parquet tables,
+compare row count + column names + order-insensitive values — and
+prints one PASS/FAIL/NO_ORACLE line per query with the Spark and
+oracle walls. The 20 slowest queries (both sides) follow on stderr:
+the budget read for the gate's front-of-registry window, and the
+triage step before chasing a slow-looking sweep wall (only ``spark=``
+is engine time).
 
 The session must run ANSI semantics (Spark 4's default): overflow,
 div-by-zero and invalid casts then raise instead of returning null, so
