@@ -22,6 +22,13 @@ Conventions (hash-compare survival rules):
   CONTRACT AUDIT instead: exact SQL-recomputable cardinalities plus
   booleans the oracle pins TRUE — as of r7 every registered query
   carries a value oracle.
+
+Conventions (session state): builders hand frames to SQL as
+``spark.sql(text, name=frame)`` with ``{name}`` in the text (PySpark
+registers each frame under a uuid view name and drops it once the
+query is analyzed; a literal brace in such a text is doubled). They
+register no temp view and set no session conf: the confs reading the
+test tables needs come from ``session.get_spark``.
 """
 
 from __future__ import annotations

@@ -847,7 +847,6 @@ def sketch_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint"),
     ).first()
     t = n // _QD_K
-    li.createOrReplaceTempView("__qd_lineitem")
     dom = (
         f"SELECT CAST({float(lo)!r} AS DOUBLE) AS lo, "
         f"CAST({float(hi)!r} AS DOUBLE) AS hi, "
@@ -859,8 +858,9 @@ def sketch_qdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = {
         r["id"]: r["cnt"]
         for r in spark.sql(
-            f"WITH base AS (SELECT l_extendedprice AS v FROM"
-            f" __qd_lineitem), dom AS ({dom}) {_qd_leaf_body()}"
+            "WITH base AS (SELECT l_extendedprice AS v FROM {li}),"
+            f" dom AS ({dom}) {_qd_leaf_body()}",
+            li=li,
         ).collect()
     }
     # level-synchronous compression (the g/cnext/f fragment bodies as
@@ -929,17 +929,16 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three aggregation granularities in ONE shuffle (the expand
     operator replicates rows per grouping set map-side) — the
     reference runs a separate pandas groupby per granularity."""
-    ev = load_table(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("__events_gs")
     return spark.sql(
         """
         SELECT event_type, CAST(year(ts) AS INT) AS yr,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100
                  AS total
-        FROM __events_gs
+        FROM {ev}
         GROUP BY GROUPING SETS ((event_type), (yr), (event_type, yr))
-        """
+        """,
+        ev=load_table(spark, sf_dir, "events"),
     )
 
 

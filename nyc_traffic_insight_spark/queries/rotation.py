@@ -15,6 +15,7 @@ import inspect
 import json
 import os
 import sys
+import textwrap
 
 MANIFEST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "rotation.json")
 _PKG = __name__.split(".")[0]
@@ -42,7 +43,10 @@ def fingerprints(registry: dict) -> dict[str, str]:
     code included) reads through its own globals, through package
     modules bound there or imported inside a function, and string
     constants that name a registered query (``REGISTRY["…"].builder``).
-    A class counts by its own source. Parts are keyed by qualified name
+    A class counts by its own source. Source is compared as its
+    ``ast.dump`` with def and class docstrings removed, so a comment,
+    docstring or layout edit leaves the fingerprint as it was; the
+    oracle text enters raw. Parts are keyed by qualified name
     and sorted, so neither the hash seed nor the checkout path enters
     the hash. Source, not optimized plans: a plan needs a session, data
     and the builders' eager jobs, and embeds session identity (RDD ids,
@@ -51,19 +55,19 @@ def fingerprints(registry: dict) -> dict[str, str]:
     memo: dict[int, tuple[set[str], list]] = {}  # id(function) -> (parts, deps)
 
     def source(mod: str, name: str) -> str | None:
-        """Source of the module-level statements that bind ``name``."""
+        """Normalized source of the module-level statements that bind ``name``."""
         if mod not in defs:
-            text = inspect.getsource(sys.modules[mod])
-            lines, d = text.splitlines(True), defs.setdefault(mod, {})
-            for st in ast.parse(text).body:
+            d = defs.setdefault(mod, {})
+            for st in ast.parse(inspect.getsource(sys.modules[mod])).body:
                 if isinstance(st, ast.ImportFrom) and str(st.module).startswith(_PKG):
                     d.update({a.asname or a.name: (st.module, a.name) for a in st.names})
                 stored = (x for x in ast.walk(st) if isinstance(x, ast.Name))
                 bound = [st.name] if hasattr(st, "name") else [  # def or class
                     x.id for x in stored if isinstance(x.ctx, ast.Store)]
+                text = _dump(st) if bound else ""  # the tree is not kept
                 for n in bound:
                     prior = d[n] if isinstance(d.get(n), str) else ""
-                    d[n] = prior + "".join(lines[st.lineno - 1 : st.end_lineno])
+                    d[n] = prior + text + "\n"
         s = defs[mod].get(name)
         return source(*s) if isinstance(s, tuple) else s
 
@@ -76,7 +80,9 @@ def fingerprints(registry: dict) -> dict[str, str]:
             names = {n for co in codes for n in co.co_names}
             strs = {c for co in codes for c in co.co_consts if isinstance(c, str)}
             mod, qual = fn.__module__, fn.__qualname__
-            parts = {f"{mod}.{qual}\n{source(mod, qual) or inspect.getsource(fn)}"}
+            text = source(mod, qual) or _dump(
+                ast.parse(textwrap.dedent(inspect.getsource(fn))))
+            parts = {f"{mod}.{qual}\n{text}"}
             deps = [registry[c].builder for c in strs & registry.keys()]
             mods = [sys.modules[n] for n in {mod} | names
                     if n.startswith(_PKG) and n in sys.modules]
@@ -106,3 +112,16 @@ def fingerprints(registry: dict) -> dict[str, str]:
                 todo += d
         out[name] = hashlib.sha256("\0".join(sorted(parts)).encode()).hexdigest()[:16]
     return out
+
+
+def _dump(tree: ast.AST) -> str:
+    """``ast.dump`` of ``tree`` with the leading docstring of every def
+    and class body removed (comments never reach the tree)."""
+    todo = [tree]
+    for x in todo:  # grows by each statement; a def is always a statement
+        if isinstance(x, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if ast.get_docstring(x, clean=False) is not None:
+                x.body = x.body[1:]
+        for f in ("body", "orelse", "finalbody", "handlers", "cases"):
+            todo += getattr(x, f, ())
+    return ast.dump(tree)

@@ -18,8 +18,6 @@ max; the Bloom build side is tiny and the probe is a broadcast join.
 
 from __future__ import annotations
 
-import itertools as _itertools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1358,9 +1356,6 @@ def unimax_oracle_sql(
     )
 
 
-_UNIMAX_SEQ = _itertools.count()  # per-call temp-view namespace
-
-
 def _lang_tokens_frame(d: DataFrame) -> DataFrame:
     """DataFrame twin of _lang_tokens_body over a (lang, text) frame —
     ONE Spark spelling of the token count, shared by the budget
@@ -1375,17 +1370,10 @@ def _lang_tokens_frame(d: DataFrame) -> DataFrame:
 def _alloc_frame(
     spark: SparkSession, lt: DataFrame, epoch_cap: int, budget_x: int
 ) -> DataFrame:
-    """Run the shared waterfilling SQL over a (lang, n_tok) frame via
-    a per-call temp view (finally-dropped) — the one Spark entry point
-    to unimax_alloc_sql."""
-    v = f"__unimax{next(_UNIMAX_SEQ)}"
-    lt.createOrReplaceTempView(v)
-    try:
-        # the alloc table is k rows; collect-free materialization via
-        # toDF keeps it lazy, and callers broadcast or return it
-        return spark.sql(unimax_alloc_sql(v, epoch_cap, budget_x))
-    finally:
-        spark.catalog.dropTempView(v)
+    """Run the shared waterfilling SQL over a (lang, n_tok) frame — the
+    one Spark entry point to unimax_alloc_sql. The alloc table is k
+    rows and stays lazy; callers broadcast or return it."""
+    return spark.sql(unimax_alloc_sql("{lt}", epoch_cap, budget_x), lt=lt)
 
 
 @register(

@@ -21,8 +21,6 @@ verification only ever runs on LSH candidates, never all O(n²) pairs
 
 from __future__ import annotations
 
-import itertools as _itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -1218,7 +1216,6 @@ register(
 # register call follows the oracle it captures).
 
 _ZIPF_TOPV = 1000
-_ZIPF_SEQ = _itertools.count()  # per-call temp-view namespace
 
 
 def _ngram_occurrences(d: DataFrame) -> DataFrame:
@@ -1493,12 +1490,7 @@ def qa_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("xt") * F.col("xt")).alias("sxx"),
         F.sum(F.col("yt") * F.col("yt")).alias("syy"),
     )
-    v = f"__zipf{next(_ZIPF_SEQ)}"
-    sums.createOrReplaceTempView(v)
-    try:
-        return spark.sql(_zipf_select(v))
-    finally:
-        spark.catalog.dropTempView(v)
+    return spark.sql(_zipf_select("{sums}"), sums=sums)
 
 
 def zipf_oracle_sql(table: str = "documents", topv: int = _ZIPF_TOPV) -> str:

@@ -19,8 +19,6 @@ their original home.
 
 from __future__ import annotations
 
-import itertools as _itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -584,18 +582,6 @@ def bpe_encode_oracle_sql(table: str = "documents") -> str:
     )
 
 
-# Per-call temp-view namespace (ADVICE r8): the chain used fixed
-# session-global view names (__bpe_w{i}, ...), so two BPE operators —
-# or the same one on two sf_dirs — executing concurrently in one
-# SparkSession could cross-contaminate MID-orchestration (sequential
-# use was safe: spark.sql analyzes eagerly, so a replaced view never
-# retroactively changes an already-built DataFrame). Every chain now
-# gets a unique prefix from this counter (itertools.count's __next__
-# is atomic under the GIL), and the builders drop their views once
-# the result DataFrame is analyzed.
-_BPE_SEQ = _itertools.count()
-
-
 def _bpe_wf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus word-frequency aggregate — the ONLY full-data pass
     in either BPE operator, and the only engine-glue step (same
@@ -614,9 +600,7 @@ def _bpe_wf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_collect_vocab(
-    spark: SparkSession, wf_view: str
-) -> list[tuple[str, int]]:
+def _bpe_collect_vocab(spark: SparkSession, wf: DataFrame) -> list[tuple[str, int]]:
     """Collect the capped vocabulary through the SAME generated
     fragment the oracle runs (_bpe_vocab_body: freq DESC, word ASC,
     LIMIT _BPE_VOCAB). The collect is contract-bounded by the LIMIT —
@@ -626,7 +610,7 @@ def _bpe_collect_vocab(
     return [
         (r["word"], r["freq"])
         for r in spark.sql(
-            f"WITH wf AS (SELECT * FROM {wf_view}) {_bpe_vocab_body()}"
+            "WITH wf AS (SELECT * FROM {wf}) " + _bpe_vocab_body(), wf=wf
         ).collect()
     ]
 
@@ -729,14 +713,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTES r15); the oracle still executes the full relational chain,
     so the driver compare pins the fold against the parity-rule
     algorithm on every check."""
-    v = f"__bpe{next(_BPE_SEQ)}"
-    _bpe_wf(spark, sf_dir).createOrReplaceTempView(f"{v}_wf")
-    try:
-        vocab = _bpe_collect_vocab(spark, f"{v}_wf")
-    finally:
-        spark.catalog.dropTempView(f"{v}_wf")
     return spark.createDataFrame(
-        _bpe_train_local(vocab),
+        _bpe_train_local(_bpe_collect_vocab(spark, _bpe_wf(spark, sf_dir))),
         schema="rank INT, left_sym STRING, right_sym STRING, "
         "merged STRING, cnt BIGINT",
     )
@@ -776,14 +754,8 @@ def bpe_encode_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained case), so the two sides agree. Output:
     (token, n_occurrences), _BPE_TOP_TOKENS rows max, ties broken by
     token ASC."""
-    v = f"__bpe{next(_BPE_SEQ)}"
     wf = materialize(_bpe_wf(spark, sf_dir))
-    wf.createOrReplaceTempView(f"{v}_wf")
-    try:
-        merges = _bpe_train_local(_bpe_collect_vocab(spark, f"{v}_wf"))
-    finally:
-        spark.catalog.dropTempView(f"{v}_wf")
-    pats = _bpe_pats(merges)
+    pats = _bpe_pats(_bpe_train_local(_bpe_collect_vocab(spark, wf)))
 
     def _segment(batches):
         import pandas as pd
@@ -917,7 +889,7 @@ def _lm_neglogp(vsize: str) -> str:
 # spelled as standard SQL block comments, so the SAME fragment text
 # runs on DuckDB (which ignores them). They are load-bearing on the
 # Spark side: the model tables come in as materialized ExistingRDD
-# views with NO stats, so without the hint Catalyst sort-merge-joins —
+# relations with NO stats, so without the hint Catalyst sort-merge-joins —
 # shuffling the corpus-sized pair stream on bigram keys, which are
 # stopword-skewed, against a table bounded by the vocab cap. With the
 # hint the model broadcasts (≤ (cap+1)² rows by construction; the cap
@@ -1024,31 +996,23 @@ def lm_score_oracle_sql(table: str = "documents", cap: int = _LM_VOCAB) -> str:
     )
 
 
-_LM_SEQ = _itertools.count()  # per-call temp-view namespace (BPE pattern)
-
-
-def _lm_run_chain(
-    spark: SparkSession, sf_dir: str, cap: int, v: str
-) -> None:
-    """ONE Spark orchestration for both LM operators: build the token
+def _lm_chain(spark: SparkSession, sf_dir: str, cap: int) -> dict[str, DataFrame]:
+    """ONE Spark orchestration for every LM operator: build the token
     and in-row adjacent-pair relations (the engine-glue step — the
     shingle slice/zip_with idiom, zero shuffle), then materialize the
     two cap-bounded model stages (vocab, bigram counts) the generated
-    fragments define, under the caller-allocated view prefix.
-    Materialization is re-inlining protection, not checkpoint-chain
-    survival (this chain is two stages, not ten): without it Spark
-    re-expands each CTE reference into a fresh corpus scan. Callers
-    drop the views in a finally via _lm_drop_views() — a mid-chain
-    failure must not leak catalog views (same rule as the BPE
-    chain)."""
+    fragments define. Returns the four frames as ``toks``, ``pairs``,
+    ``vocab`` and ``bg``, the names the builders' fragments read them
+    by (``spark.sql(text, **chain)``). Materialization is re-inlining
+    protection, not checkpoint-chain survival (this chain is two
+    stages, not ten): without it Spark re-expands each CTE reference
+    into a fresh corpus scan."""
     docs = _docs(spark, sf_dir)
     a = F.filter(
         F.split(F.translate(F.trim("text"), _BPE_UP, _BPE_LO), _BPE_WS),
         lambda x: x != F.lit(""),
     )
-    docs.select("doc_id", F.explode(a).alias("w")).createOrReplaceTempView(
-        f"{v}_toks"
-    )
+    toks = docs.select("doc_id", F.explode(a).alias("w"))
     # r16 single-evaluation shape for the pairs view: `a` (an O(len)
     # split+filter scan) was referenced five times by the pair
     # expression (two slices, and size(a) behind each slice's length
@@ -1066,30 +1030,21 @@ def _lm_run_chain(
         F.slice(aa, 2, n),
         lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
     )
-    (
+    pairs = (
         docs.select("doc_id", F.explode(F.array(a)).alias("a"))
         .select("doc_id", F.explode(pair).alias("p"))
         .select("doc_id", "p.w1", "p.w2")
-        .createOrReplaceTempView(f"{v}_pairs")
     )
-    materialize(
-        spark.sql(_lm_vocab_body(f"{v}_toks", cap))
-    ).createOrReplaceTempView(f"{v}_vocab")
-    materialize(
+    vocab = materialize(spark.sql(_lm_vocab_body("{toks}", cap), toks=toks))
+    bg = materialize(
         spark.sql(
-            f"WITH mpairs AS ({_lm_mpairs_body(f'{v}_pairs', f'{v}_vocab')}) "
-            + _lm_bg_body("mpairs")
+            f"WITH mpairs AS ({_lm_mpairs_body('{pairs}', '{vocab}')}) "
+            + _lm_bg_body("mpairs"),
+            pairs=pairs,
+            vocab=vocab,
         )
-    ).createOrReplaceTempView(f"{v}_bg")
-
-
-def _lm_drop_views(spark: SparkSession, v: str) -> None:
-    """Drop one LM chain's temp views — finally-safe on a partially
-    built chain (dropTempView on a never-registered name returns
-    False, no raise), and safe AFTER the result DataFrame is built
-    (spark.sql resolves views eagerly at analysis)."""
-    for name in (f"{v}_toks", f"{v}_pairs", f"{v}_vocab", f"{v}_bg"):
-        spark.catalog.dropTempView(name)
+    )
+    return {"toks": toks, "pairs": pairs, "vocab": vocab, "bg": bg}
 
 
 @register(
@@ -1114,16 +1069,12 @@ def lm_train_bigram(
     log-probs — the model-table half of the CCNet-style perplexity
     ranking story. Round-10 preview promoted in round 11. Output:
     (w1, w2, pair_cnt, ctx_cnt, neg_logp)."""
-    v = f"__lm{next(_LM_SEQ)}"
-    try:
-        _lm_run_chain(spark, sf_dir, cap, v)
-        return spark.sql(
-            f"WITH ctx AS ({_lm_ctx_body(f'{v}_bg')}), "
-            f"vsize AS ({_lm_vs_body(f'{v}_vocab')}) "
-            + _lm_train_select(f"{v}_bg", "ctx", "vsize", topk)
-        )
-    finally:
-        _lm_drop_views(spark, v)
+    return spark.sql(
+        f"WITH ctx AS ({_lm_ctx_body('{bg}')}), "
+        f"vsize AS ({_lm_vs_body('{vocab}')}) "
+        + _lm_train_select("{bg}", "ctx", "vsize", topk),
+        **_lm_chain(spark, sf_dir, cap),
+    )
 
 
 @register(
@@ -1146,17 +1097,13 @@ def lm_score_perplexity(
     quality signal CCNet ranks Common Crawl with. Round-10 preview
     promoted in round 11. Output: (doc_id, n_bigrams, ppl);
     docs with <2 tokens have no bigrams and are absent."""
-    v = f"__lm{next(_LM_SEQ)}"
-    try:
-        _lm_run_chain(spark, sf_dir, cap, v)
-        return spark.sql(
-            f"WITH mpairs AS ({_lm_mpairs_body(f'{v}_pairs', f'{v}_vocab')}), "
-            f"ctx AS ({_lm_ctx_body(f'{v}_bg')}), "
-            f"vsize AS ({_lm_vs_body(f'{v}_vocab')}) "
-            + _lm_score_select("mpairs", f"{v}_bg", "ctx", "vsize")
-        )
-    finally:
-        _lm_drop_views(spark, v)
+    return spark.sql(
+        f"WITH mpairs AS ({_lm_mpairs_body('{pairs}', '{vocab}')}), "
+        f"ctx AS ({_lm_ctx_body('{bg}')}), "
+        f"vsize AS ({_lm_vs_body('{vocab}')}) "
+        + _lm_score_select("mpairs", "{bg}", "ctx", "vsize"),
+        **_lm_chain(spark, sf_dir, cap),
+    )
 
 
 
@@ -1242,21 +1189,16 @@ def lm_ppl_buckets(
     middle / tail (registered r13; r12 preview). Output: (doc_id,
     lang, ppl, ppl_bucket, bucket_label); docs with <2 tokens have no
     perplexity and are absent (the scorer's contract)."""
-    v = f"__lm{next(_LM_SEQ)}"
-    try:
-        _lm_run_chain(spark, sf_dir, cap, v)
-        docs = _docs(spark, sf_dir)
-        docs.select("doc_id", "lang").createOrReplaceTempView(f"{v}_docs")
-        return spark.sql(
-            f"WITH mpairs AS ({_lm_mpairs_body(f'{v}_pairs', f'{v}_vocab')}), "
-            f"ctx AS ({_lm_ctx_body(f'{v}_bg')}), "
-            f"vsize AS ({_lm_vs_body(f'{v}_vocab')}), "
-            f"scores AS ({_lm_score_select('mpairs', f'{v}_bg', 'ctx', 'vsize')}) "
-            + _lm_buckets_select("scores", f"{v}_docs", nb)
-        )
-    finally:
-        _lm_drop_views(spark, v)
-        spark.catalog.dropTempView(f"{v}_docs")
+    c = _lm_chain(spark, sf_dir, cap)
+    c["docs"] = _docs(spark, sf_dir).select("doc_id", "lang")
+    return spark.sql(
+        f"WITH mpairs AS ({_lm_mpairs_body('{pairs}', '{vocab}')}), "
+        f"ctx AS ({_lm_ctx_body('{bg}')}), "
+        f"vsize AS ({_lm_vs_body('{vocab}')}), "
+        f"scores AS ({_lm_score_select('mpairs', '{bg}', 'ctx', 'vsize')}) "
+        + _lm_buckets_select("scores", "{docs}", nb),
+        **c,
+    )
 
 
 # ---------------- Kneser-Ney bigram trainer (round-13 preview)
@@ -1353,17 +1295,13 @@ def lm_train_kneser_ney(
     corpus and emit the top-K bigrams with counts, continuation
     counts, and P_kn (registered r13; r13 preview). Output: (w1, w2,
     pair_cnt, ctx_cnt, fanout, fanin, pkn)."""
-    v = f"__lm{next(_LM_SEQ)}"
-    try:
-        _lm_run_chain(spark, sf_dir, cap, v)
-        return spark.sql(
-            f"WITH ctx AS ({_lm_ctx_body(f'{v}_bg')}), "
-            + _lm_kn_parts(f"{v}_bg")
-            + " "
-            + _lm_kn_select(f"{v}_bg", "ctx", topk)
-        )
-    finally:
-        _lm_drop_views(spark, v)
+    return spark.sql(
+        f"WITH ctx AS ({_lm_ctx_body('{bg}')}), "
+        + _lm_kn_parts("{bg}")
+        + " "
+        + _lm_kn_select("{bg}", "ctx", topk),
+        **_lm_chain(spark, sf_dir, cap),
+    )
 
 
 # r13 promotion of the r13 preview — register call after the builder
@@ -1444,18 +1382,14 @@ def lm_score_kneser_ney(
     KN sibling of lm_score_perplexity; registered r13, r13 preview).
     Output: (doc_id, n_bigrams, ppl_kn); docs with <2 tokens are
     absent."""
-    v = f"__lm{next(_LM_SEQ)}"
-    try:
-        _lm_run_chain(spark, sf_dir, cap, v)
-        return spark.sql(
-            f"WITH mpairs AS ({_lm_mpairs_body(f'{v}_pairs', f'{v}_vocab')}), "
-            f"ctx AS ({_lm_ctx_body(f'{v}_bg')}), "
-            + _lm_kn_parts(f"{v}_bg")
-            + " "
-            + _lm_kn_score_select("mpairs", f"{v}_bg", "ctx")
-        )
-    finally:
-        _lm_drop_views(spark, v)
+    return spark.sql(
+        f"WITH mpairs AS ({_lm_mpairs_body('{pairs}', '{vocab}')}), "
+        f"ctx AS ({_lm_ctx_body('{bg}')}), "
+        + _lm_kn_parts("{bg}")
+        + " "
+        + _lm_kn_score_select("mpairs", "{bg}", "ctx"),
+        **_lm_chain(spark, sf_dir, cap),
+    )
 
 
 # r13 promotion of the r13 preview — register call after the builder.

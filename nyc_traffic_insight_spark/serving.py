@@ -71,11 +71,13 @@ class PredictService:
         self._log_target = log_target
 
     def predict(self, features: dict[str, float]) -> float:
-        from nyc_traffic_insight_spark.ml.pipelines import FEATURES
-
-        row = [tuple(float(features[f]) for f in FEATURES)]
-        df = self._spark.createDataFrame(row, FEATURES)
-        p = float(self._model.transform(df).select("prediction").first()[0])
         import math
 
+        from nyc_traffic_insight_spark.ml.pipelines import (
+            FEATURES,
+            single_row_inference,
+        )
+
+        row = {f: float(features[f]) for f in FEATURES}
+        p = single_row_inference(self._spark, self._model, row)
         return math.expm1(p) if self._log_target else p

@@ -37,6 +37,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 _COLORS = ("red", "orange", "yellow", "green")
+_WIDTH, _HEIGHT = 800, 600  # SVG viewport, px
 
 _PAGE = """<!DOCTYPE html>
 <html><head><meta charset="utf-8">
@@ -60,16 +61,7 @@ yellow &gt; 5, green otherwise.</p>
 """
 
 
-def render_map_html(
-    rows,
-    title: str,
-    x_field: str = "longitude",
-    y_field: str = "latitude",
-    color_field: str = "color",
-    label_field: str | None = None,
-    width: int = 800,
-    height: int = 600,
-) -> str:
+def render_map_html(rows, title: str, label_field: str | None = None) -> str:
     """Standalone HTML for one map slice — the folium replacement
     (reference main.py:215-248 renders folium CircleMarkers per
     feature; here each row becomes an SVG circle).
@@ -84,13 +76,13 @@ def render_map_html(
     same rows → same bytes."""
     pts = [
         (
-            float(r[x_field]),
-            float(r[y_field]),
-            str(r.get(color_field, "green")),
+            float(r["longitude"]),
+            float(r["latitude"]),
+            str(r.get("color", "green")),
             str(r[label_field]) if label_field else "",
         )
         for r in rows
-        if r.get(x_field) is not None and r.get(y_field) is not None
+        if r.get("longitude") is not None and r.get("latitude") is not None
     ]
     markers = []
     if pts:
@@ -101,13 +93,13 @@ def render_map_html(
         pad = 20
 
         def sx(x: float) -> float:
-            return pad + (width - 2 * pad) * (
+            return pad + (_WIDTH - 2 * pad) * (
                 (x - x0) / (x1 - x0) if x1 > x0 else 0.5
             )
 
         def sy(y: float) -> float:
             # flip: north up
-            return pad + (height - 2 * pad) * (
+            return pad + (_HEIGHT - 2 * pad) * (
                 (y1 - y) / (y1 - y0) if y1 > y0 else 0.5
             )
 
@@ -127,8 +119,8 @@ def render_map_html(
         title=_esc(title),
         n=len(pts),
         legend=legend,
-        w=width,
-        h=height,
+        w=_WIDTH,
+        h=_HEIGHT,
         markers="\n".join(markers),
     )
 
@@ -292,18 +284,16 @@ class EngineHTTPServer(ThreadingHTTPServer):
         addr: tuple[str, int],
         map_slice,
         predict_service=None,
-        map_fields: dict | None = None,
+        label_field: str | None = None,
     ):
         super().__init__(addr, _Handler)
         self._map_slice = map_slice
         self.predict_service = predict_service
-        self._map_fields = map_fields or {}
+        self._label_field = label_field
 
     def map_html(self, borough: str, year: int) -> str:
         rows = self._map_slice(borough, year)
-        return render_map_html(
-            rows, title=f"{borough} {year}", **self._map_fields
-        )
+        return render_map_html(rows, f"{borough} {year}", self._label_field)
 
 
 def serve(
@@ -312,7 +302,7 @@ def serve(
     predict_service=None,
     host: str = "127.0.0.1",
     port: int = 0,
-    map_fields: dict | None = None,
+    label_field: str | None = None,
 ) -> EngineHTTPServer:
     """Start the shell over a published map table (serving.py's
     ``publish_map_table`` layout) — returns the running server (bound
@@ -327,9 +317,7 @@ def serve(
             r.asDict() for r in map_view(spark, map_path, borough, year).collect()
         ]
 
-    srv = EngineHTTPServer(
-        (host, port), map_slice, predict_service, map_fields
-    )
+    srv = EngineHTTPServer((host, port), map_slice, predict_service, label_field)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     return srv

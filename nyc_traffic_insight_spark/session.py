@@ -44,6 +44,18 @@ DEFAULT_DRIVER_MEMORY = (
 )
 
 
+# What reading the test tables needs: the testdata stores events.ts as
+# TIMESTAMP(NANOS), read as long and floor-converted by load_table;
+# naive parquet timestamps read as TimestampType (not NTZ) so the
+# declared schemas apply; and naive storage ↔ LTZ semantics line up
+# only in UTC (DuckDB reads the same files as naive wall time).
+READ_CONF = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def get_spark(
     app_name: str = "nyc-traffic-insight-spark",
     master: str | None = None,
@@ -64,14 +76,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", DEFAULT_DRIVER_MEMORY)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # the driver's testdata stores events.ts as TIMESTAMP(NANOS)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**READ_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -24,21 +24,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet reader rejects; we read nanos as long and floor-convert to
     microsecond timestamps — the same truncation DuckDB applies, so the
     oracle sees identical values. Integer division (no doubles: epoch
-    nanos ≈ 1.7e18 overflows a double's 53-bit mantissa).
+    nanos ≈ 1.7e18 overflows a double's 53-bit mantissa). The session
+    must carry ``session.READ_CONF``, as every ``get_spark`` session does.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TESTDATA_TABLES}")
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # read naive parquet timestamps as TimestampType (not NTZ) so the
-        # declared schemas and CSV timestampFormat options apply; with the
-        # session timezone pinned to UTC the wall values are unchanged.
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # naive storage ↔ LTZ semantics only line up when the session
-        # timezone is UTC (DuckDB reads the same files as naive wall time)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass  # non-settable at runtime → builder must have set it
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     expected = TESTDATA_SCHEMAS[name]
     actual = {f.name: f.dataType for f in df.schema.fields}

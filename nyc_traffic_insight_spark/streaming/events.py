@@ -134,12 +134,10 @@ def run_upsert_stream(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         (
             batch_df.withColumn("hour_part", F.date_format("window_start", "yyyyMMddHH"))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("hour_part")
             .parquet(out_dir)
         )

@@ -152,6 +152,40 @@ def test_fingerprint_follows_reached_code(monkeypatch, patch, reacher):
     assert after["agg_count"] == before["agg_count"]
 
 
+@pytest.mark.parametrize(
+    "old, new, moves",
+    [
+        ("(see above).", "(reworded).", False),  # docstring only
+        ("    df = load_table(spark, sf_dir, name)\n",
+         "    # a new comment\n    df = load_table(spark, sf_dir, name)  # here too\n",
+         False),
+        ("rg >= para", "rg > para", True),  # one code token
+    ],
+)
+def test_fingerprint_ignores_docstrings_and_comments(monkeypatch, old, new, moves):
+    """An edit to ``textops._wide_table`` moves the fingerprint of a
+    query that reaches it only when it changes code."""
+    import inspect
+
+    from nyc_traffic_insight_spark.queries import load_all, rotation, textops
+
+    reg = load_all()
+    before = rotation.fingerprints(reg)
+    getsource = inspect.getsource
+
+    def edited(obj):
+        text = getsource(obj)
+        if obj is textops:
+            assert old in text
+            text = text.replace(old, new, 1)
+        return text
+
+    monkeypatch.setattr(inspect, "getsource", edited)
+    after = rotation.fingerprints(reg)
+    assert (after["text_perplexity_proxy"] != before["text_perplexity_proxy"]) is moves
+    assert after["agg_count"] == before["agg_count"]
+
+
 def test_fingerprints_ignore_hash_seed_and_checkout_path(tmp_path):
     import json
     import os

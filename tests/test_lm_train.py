@@ -297,25 +297,31 @@ if _HAVE_HYPOTHESIS:
 
 
 def test_failed_chain_leaks_no_temp_views(spark, tmp_path):
-    """The r9 review fix: a chain that fails partway (here: at the
-    very first job, scanning a directory with no documents.parquet)
-    must drop whatever views it registered before the raise — leaked
-    catalog views would pin their checkpointed frames for the session
-    lifetime. Applies to all four BPE/LM builders via the shared
-    try/finally shape; exercised on one of each family."""
+    """A chain that fails partway (here: at the very first job,
+    scanning a directory with no documents.parquet) leaves no
+    temporary view behind — a leaked view would pin its materialized
+    frame for the session lifetime. Exercised on one builder of each
+    family (LM, BPE), then on the success path of two builders that
+    once left a fixed-name view behind."""
+    from nyc_traffic_insight_spark.queries.aggregates import (
+        agg_grouping_sets,
+        sketch_qdigest,
+    )
     from nyc_traffic_insight_spark.queries.tokenizers import bpe_train_merges
+    from tests.conftest import SF_SMOKE
+
+    def temp_views() -> list[str]:
+        return [t.name for t in spark.catalog.listTables() if t.isTemporary]
 
     empty = tmp_path / "no_tables"
     empty.mkdir()
     for fn in (lm_train_bigram, bpe_train_merges):
         with pytest.raises(Exception):
             fn(spark, str(empty))
-    leaked = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("__lm") or t.name.startswith("__bpe")
-    ]
-    assert leaked == []
+    assert temp_views() == []
+    for fn in (agg_grouping_sets, sketch_qdigest):
+        fn(spark, SF_SMOKE).collect()
+    assert temp_views() == []
 
 
 def test_spark_matches_duckdb_on_testdata_cap_bound(spark):

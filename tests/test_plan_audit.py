@@ -13,10 +13,7 @@ Since r13 this gates the ENTIRE registry (VERDICT r12 #3): AUDITED is
 derived from load_all(), so a query cannot register without entering
 the audit. The full sweep builds every plan at the smoke SF (~2.5 min
 wall in one process — the build-time-job builders, BPE/LM/MLlib, are
-the bulk); tools/plan_audit.py remains the standalone per-round tool.
-The LEGACY_AUDITED list below is kept only as the historical record of
-the pre-r13 CI subset (and so HEADLINE membership checks read
-naturally); it is not what parametrizes the test.
+the bulk).
 """
 
 from __future__ import annotations
@@ -28,152 +25,6 @@ from tests.conftest import SF_SMOKE
 
 # Full registry: every registered query is plan-audited (r13).
 AUDITED = sorted(load_all().keys())
-
-# The pre-r13 CI subset (bench headline + per-round additions),
-# retained as documentation of audit history only.
-LEGACY_AUDITED = [
-    "flagship_volume_features",
-    "join_traffic_weather_boro",
-    "join_traffic_weather_time",
-    "join_star_broadcast",
-    "join_asof",
-    "join_range_binned",
-    "join_salted_skew",
-    "join_nearest_spatial",
-    "agg_count",
-    "agg_regression_metrics",
-    "win_lag_multi",
-    "win_roll_mean_24",
-    "win_ranking",
-    "pivot_onehot",
-    "stream_sessionization",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_search_bruteforce_topk",
-    "sim_search_lsh_buckets",
-    "sim_search_ivf_topk",
-    "sim_search_topk_vectorized",
-    "text_quality_score",
-    "text_fingerprint",
-    "geo_reproject_forward",
-    "mm_extract_features",
-    "text_decontaminate",
-    "shard_pack_greedy",
-    "vocab_top_ngrams",
-    "sample_temperature_mix",
-    "sketch_qdigest",
-    "funnel_conversion",
-    "cohort_retention",
-    "agg_outlier_mad",
-    "dedup_substring_exact",
-    "emb_centroid_by_label",
-    "join_fuzzy_key",
-    "stream_stream_join",
-    "sink_merge_upsert",
-    "qa_snapshot_diff",
-    "qa_profile_table",
-    "dim_scd2_build",
-    "win_first_last",
-    "agg_skew_kurtosis",
-    "join_bloom_prefilter",
-    "layout_zorder_key",
-    "dedup_containment",
-    "agg_entropy_by_group",
-    "win_streaks",
-    "report_shipping_priority",
-    "report_region_supplier_volume",
-    "report_returned_customers",
-    "split_deterministic",
-    "text_tfidf_top_terms",
-    # round 5 behavioral tier
-    "win_sessionize_batch",
-    "event_transition_matrix",
-    "report_market_share",
-    "agg_audience_overlap",
-    "report_rfm_scores",
-    # round 5 late additions (r6 front-load)
-    "sketch_hll_overlap",
-    "text_chunk_fixed",
-    "win_ewma",
-    "event_attribution_last_touch",
-    "sample_negatives_per_user",
-    "time_spine_locf",
-    "win_anomaly_zscore",
-    "report_copurchase_pairs",
-    "agg_gini_by_group",
-    "report_session_conversion",
-    "win_rank_change",
-    "agg_seasonality_profile",
-    "pipeline_user_features",
-    "win_topn_per_key",
-    "win_pct_change",
-    "agg_time_to_convert",
-    "emb_pair_distance_audit",
-    "qa_freshness_audit",
-    "report_revenue_bridge",
-    "join_scd2_pointintime",
-    "stream_disorder_audit",
-    "agg_wau_exact",
-    "sketch_hll_rolling",
-    "win_sessionize_native",
-    "qa_rapid_repeat_audit",
-    "win_seasonal_decompose",
-    "text_oov_rate",
-    "pipeline_training_dataset",
-    "agg_auc_exact",
-    "agg_precision_recall_curve",
-    "agg_ks_statistic",
-    "agg_lift_by_decile",
-    "qa_expectations_report",
-    "pipeline_incremental_rollup",
-    "agg_bootstrap_ci",
-    "report_ab_test",
-    "agg_chi_square_independence",
-    "report_forecast_backtest",
-    "win_changepoint_cusum",
-    "win_autocorrelation",
-    "agg_benford_audit",
-    "win_max_drawdown",
-    "report_cohort_ltv",
-    "text_readability",
-    # round 6 additions
-    "ml_segmented_router",
-    "text_bpe_pair_counts",
-    "graph_pagerank_topk",
-    "agg_cumulative_users",
-    "report_pareto_deciles",
-    "emb_covariance_matrix",
-    "join_asof_nearest",
-    # round 8 addition (the CDC promotion)
-    "dedup_substring_cdc",
-    # round 9 additions (the BPE promotions). Their builders execute
-    # the materialized merge chain at build time (~5-10 s at smoke SF
-    # — the checkpoint-per-iteration discipline), so auditing them
-    # here costs real CI seconds; kept anyway because HEADLINE must
-    # stay a subset of AUDITED. Final plans are flag-free: trainer =
-    # union of 10 one-row checkpointed bests + rank sort; encoder =
-    # partial-agg + TakeOrdered over the checkpointed symbol table.
-    "bpe_train_merges",
-    "bpe_encode_top_tokens",
-    # round 11 additions (the bigram-LM promotions). Builders run the
-    # materialized two-stage model chain at build time (vocab + bigram
-    # counts, cap-bounded). Probed plans: zero SortMergeJoin (the
-    # /*+ BROADCAST */ hints in the shared fragments take — trainer 1
-    # BHJ, scorer 4 BHJ), corpus shuffles only at the accounted
-    # groupBys (model count; per-doc mean).
-    "lm_train_bigram",
-    "lm_score_perplexity",
-    # round 12 additions (the embedding-curation promotions). Probed
-    # plans (r12): zero flags on all three — SemDeDup's witness search
-    # is a shuffled equi-join on cell (2 in-memory assignment scans
-    # after the self-pair rework, no third branch, no final vec_id
-    # join), the prototype filter is window-only with a k-row
-    # broadcast of cell sizes, and the composed D4 pipeline is the
-    # union of the two shapes.
-    "dedup_semantic",
-    "emb_prototypes_filter",
-    "pipeline_d4_curation",
-]
 
 # query -> flags it is ALLOWED to carry, with the reason pinned here.
 ALLOWED = {

@@ -60,18 +60,13 @@ def test_quality_scans_single_evaluation(spark):
 def test_lm_pairs_view_single_scan(spark):
     import nyc_traffic_insight_spark.queries.tokenizers as tk
 
-    v = "r16pin"
-    tk._lm_run_chain(spark, SF_SMOKE, tk._LM_VOCAB, v)
-    try:
-        plan = (
-            spark.table(f"{v}_pairs")
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
-        # the split+filter tokenize appears once — was ~5 (two slices
-        # plus the size term behind each slice length)
-        assert plan.count("split(") == 1, plan
-        assert plan.count("filter(") == 1, plan
-    finally:
-        tk._lm_drop_views(spark, v)
+    plan = (
+        tk._lm_chain(spark, SF_SMOKE, tk._LM_VOCAB)["pairs"]
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    # the split+filter tokenize appears once — was ~5 (two slices
+    # plus the size term behind each slice length)
+    assert plan.count("split(") == 1, plan
+    assert plan.count("filter(") == 1, plan

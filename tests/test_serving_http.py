@@ -72,8 +72,7 @@ def test_http_routes_with_injected_slice():
         calls.append((borough, year))
         return _rows()
 
-    srv = EngineHTTPServer(("127.0.0.1", 0), fake_slice,
-                           map_fields={"label_field": "street"})
+    srv = EngineHTTPServer(("127.0.0.1", 0), fake_slice, label_field="street")
     import threading
 
     threading.Thread(target=srv.serve_forever, daemon=True).start()
@@ -150,7 +149,7 @@ def test_http_shell_over_spark(spark, tmp_path):
         (F.lower("Borough") == "b3") & (F.year("ts") == year)
     ).count()
 
-    srv = serve(spark, path, map_fields={"label_field": "RequestID"})
+    srv = serve(spark, path, label_field="RequestID")
     try:
         status, body = _get(srv, f"/map?borough=B3&year={year}")
         assert status == 200

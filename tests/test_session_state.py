@@ -6,12 +6,17 @@ and its host-derived defaults.
   writes its checkpoint files there, and the queries built on them
   still match their DuckDB oracles;
 - with ``SPARK_GRAFT_CPUS`` unset, the default ``local[N]`` is the
-  host's usable core count (what ``nproc`` reports), not a fixed 32.
+  host's usable core count (what ``nproc`` reports), not a fixed 32;
+- the package registers no temp view and sets no conf: builders hand
+  frames to SQL as ``spark.sql(text, name=frame)``, and session confs
+  are set only by ``get_spark``.
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
+import re
 import subprocess
 import sys
 
@@ -83,3 +88,15 @@ def test_default_cpus_follow_host(env_cpus):
         if env_cpus
         else [str(len(os.sched_getaffinity(0))), f"{mem_kb // 1024 // 4}m"]
     )
+
+
+def test_package_mutates_no_session_state():
+    pattern = re.compile(r"createOrReplaceTempView|dropTempView|spark\.conf\.set\(")
+    package = pathlib.Path(_REPO, "nyc_traffic_insight_spark")
+    hits = [
+        f"{path.relative_to(_REPO)}:{i}"
+        for path in sorted(package.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == []

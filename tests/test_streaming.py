@@ -37,6 +37,8 @@ def test_foreachbatch_upsert_is_idempotent(spark, tmp_path, source_dir):
         tumbling_counts,
     )
 
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(mode)
     out = str(tmp_path / "upsert_out")
     ckpt = str(tmp_path / "upsert_ckpt")
     run_upsert_stream(spark, source_dir, ckpt, out)
@@ -53,6 +55,8 @@ def test_foreachbatch_upsert_is_idempotent(spark, tmp_path, source_dir):
     n1 = spark.read.parquet(out).count()
     run_upsert_stream(spark, source_dir, ckpt, out)
     assert spark.read.parquet(out).count() == n1
+    # dynamic overwrite is the sink's write option, not session state
+    assert spark.conf.get(mode) == before
 
 
 def _run_stream_to_parquet(df, tmp_path, tag):
