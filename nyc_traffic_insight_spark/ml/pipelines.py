@@ -192,34 +192,6 @@ def fit_gbt(
 
 # ----------------------------------------------------- catalog query impls
 
-def linear_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = feature_table(spark, sf_dir)
-    train, test = temporal_split_scalable(df)
-    model = fit_linear_regression(train)
-    return _metrics_row(spark, "linear_regression", model.transform(test), LABEL)
-
-
-def random_forest_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reduced size (20×8) for the per-round driver run; the reference's
-    100×15 comes via fit_random_forest defaults in tests."""
-    df = feature_table(spark, sf_dir)
-    train, test = temporal_split_scalable(df)
-    model = fit_random_forest(train, num_trees=20, max_depth=8)
-    rf = model.stages[-1]
-    imp_sum = float(sum(rf.featureImportances.toArray()))  # M7 invariant
-    metrics = _metrics_row(spark, "random_forest", model.transform(test), LABEL)
-    return metrics.withColumn("importance_sum", F.round(F.lit(imp_sum), 4))
-
-
-def gbt_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GBT on log1p target, expm1-inverted for raw-scale metrics (C11)."""
-    df = feature_table(spark, sf_dir)
-    train, test = temporal_split_scalable(df)
-    model = fit_gbt(train, max_iter=20)
-    pred = model.transform(test).withColumn("prediction", F.expm1("prediction"))
-    return _metrics_row(spark, "gbt_log_target", pred, LABEL)
-
-
 def segmented_model_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4 SegmentedModel: route rows to an event-vs-normal submodel by a
     boolean mask, oversample the rare segment ×5 for training, predict

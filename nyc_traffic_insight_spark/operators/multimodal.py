@@ -6,7 +6,7 @@ carries media as ``binary`` payload columns with typed metadata
 run as Arrow-batched Pandas UDFs over ``mapInPandas``.
 
 The decode step itself needs image/audio codecs that are NOT in this
-container, so it is STUBBED: ``set_decoder`` installs a real decoder
+container, so it is STUBBED: ``_real_decoder`` supplies a real decoder
 when the libs exist (import-gated), and the default deterministic fake
 derives pseudo-features from the payload bytes so the Spark-side
 plumbing — schema, batching, partitioning, UDF signature — is real and
@@ -71,11 +71,6 @@ def _real_decoder() -> Decoder | None:
 
 
 _DECODER: Decoder = _real_decoder() or _fake_decode
-
-
-def set_decoder(decoder: Decoder) -> None:
-    global _DECODER
-    _DECODER = decoder
 
 
 def extract_features(assets: DataFrame) -> DataFrame:

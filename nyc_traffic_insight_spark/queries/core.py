@@ -774,9 +774,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both sides, or a broadcast join when the change batch is small
     (the common case; Spark picks it from stats). This is exactly the
     join Delta/Iceberg MERGE executes under the hood; expressing it as
-    a query makes the semantics testable without a table format.
-    foreachBatch streaming upsert over the same semantics:
-    streaming/events.py::run_upsert_stream."""
+    a query makes the semantics testable without a table format."""
     orders = load_table(spark, sf_dir, "orders")
     target = orders.select(
         F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("price")

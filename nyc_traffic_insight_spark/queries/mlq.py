@@ -100,9 +100,7 @@ def ml_linear_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     normal-equations solve (X'X/X'y aggregated distributively, numpy
     lstsq on the 8×8 system driver-side) agree with MLlib's transform
     to 1e-4 relative on every test row, and (d) test R² clears the
-    pinned 0.8 floor. Raw r2/rmse/mae stay available via
-    ml.pipelines.linear_regression_metrics and their floors in
-    tests/test_ml.py.
+    pinned 0.8 floor.
 
     Scale shape: the fit is MLlib's own distributed WLS; the audit adds
     one 44-column aggregate pass (X'X upper triangle + X'y + count)
@@ -209,8 +207,7 @@ def ml_random_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact input cardinality, impurity importances forming a
     distribution (sum≈1, all ≥0; the reference prints the same table,
     random_forest.py:106-109), and test R² over the pinned 0.9 floor
-    (measured 0.9987 at sf0.01; the label is near-linear in qty_price).
-    Raw metrics stay in ml.pipelines.random_forest_metrics."""
+    (measured 0.9987 at sf0.01; the label is near-linear in qty_price)."""
     import math
 
     from pyspark.ml.evaluation import RegressionEvaluator
@@ -267,8 +264,7 @@ def ml_gbt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3 audit: boosting numerics are seeded-internal, so the hash
     pins the exact input cardinality and that the log1p-target fit,
     expm1-inverted (C11), still clears R² 0.9 on the raw scale
-    (measured 0.9985 at sf0.01). Raw metrics in
-    ml.pipelines.gbt_metrics."""
+    (measured 0.9985 at sf0.01)."""
     from pyspark.ml.evaluation import RegressionEvaluator
 
     from nyc_traffic_insight_spark.ml.pipelines import (

@@ -39,11 +39,9 @@ def fingerprints(registry: dict) -> dict[str, str]:
     """Hash each query's package-source closure and rendered oracle text.
 
     The closure is the source of every package function and
-    module-level binding the builder reaches: names its code (nested
-    code included) reads through its own globals, through package
-    modules bound there or imported inside a function, and string
-    constants that name a registered query (``REGISTRY["…"].builder``).
-    A class counts by its own source. Source is compared as its
+    module-level binding the builder reaches, one ``reach`` step per
+    function (``tests/test_reached.py`` walks the same steps from every
+    root). A class counts by its own source. Source is compared as its
     ``ast.dump`` with def and class docstrings removed, so a comment,
     docstring or layout edit leaves the fingerprint as it was; the
     oracle text enters raw. Parts are keyed by qualified name
@@ -74,29 +72,12 @@ def fingerprints(registry: dict) -> dict[str, str]:
     def node(fn) -> tuple[set[str], list]:
         """One function's own parts and the package functions it reaches."""
         if id(fn) not in memo:
-            codes = [fn.__code__]
-            for co in codes:  # grows by each nested code object
-                codes += [c for c in co.co_consts if inspect.iscode(c)]
-            names = {n for co in codes for n in co.co_names}
-            strs = {c for co in codes for c in co.co_consts if isinstance(c, str)}
             mod, qual = fn.__module__, fn.__qualname__
             text = source(mod, qual) or _dump(
                 ast.parse(textwrap.dedent(inspect.getsource(fn))))
-            parts = {f"{mod}.{qual}\n{text}"}
-            deps = [registry[c].builder for c in strs & registry.keys()]
-            mods = [sys.modules[n] for n in {mod} | names
-                    if n.startswith(_PKG) and n in sys.modules]
-            for m in mods:  # grows by each package module a name binds
-                for n in names & vars(m).keys():
-                    v = vars(m)[n]
-                    if inspect.ismodule(v):
-                        if v.__name__.startswith(_PKG) and v not in mods:
-                            mods.append(v)
-                    elif inspect.isfunction(v):
-                        if str(v.__module__).startswith(_PKG):
-                            deps.append(v)
-                    elif (text := source(m.__name__, n)) is not None:
-                        parts.add(f"{m.__name__}.{n}\n{text}")
+            deps, bound = reach(fn.__code__, mod, registry)
+            parts = {f"{mod}.{qual}\n{text}"} | {
+                f"{m}.{n}\n{t}" for m, n in bound if (t := source(m, n)) is not None}
             memo[id(fn)] = parts, deps
         return memo[id(fn)]
 
@@ -112,6 +93,36 @@ def fingerprints(registry: dict) -> dict[str, str]:
                 todo += d
         out[name] = hashlib.sha256("\0".join(sorted(parts)).encode()).hexdigest()[:16]
     return out
+
+
+def reach(code, mod: str, registry: dict) -> tuple[list, list[tuple[str, str]]]:
+    """One closure step: the package functions ``code`` (nested code
+    included) reaches, and the ``(module, name)`` of every other package
+    binding it reads. Names resolve through module ``mod``'s globals
+    (``""`` for a script outside the package) and through package
+    modules bound there or imported inside the code; a string constant
+    that names a registered query reaches its builder."""
+    codes = [code]
+    for co in codes:  # grows by each nested code object
+        codes += [c for c in co.co_consts if inspect.iscode(c)]
+    names = {n for co in codes for n in co.co_names}
+    strs = {c for co in codes for c in co.co_consts if isinstance(c, str)}
+    deps = [registry[c].builder for c in strs & registry.keys()]
+    bound = []
+    mods = [sys.modules[n] for n in {mod} | names
+            if n.startswith(_PKG) and n in sys.modules]
+    for m in mods:  # grows by each package module a name binds
+        for n in names & vars(m).keys():
+            v = vars(m)[n]
+            if inspect.ismodule(v):
+                if v.__name__.startswith(_PKG) and v not in mods:
+                    mods.append(v)
+            elif inspect.isfunction(v):
+                if str(v.__module__).startswith(_PKG):
+                    deps.append(v)
+            else:
+                bound.append((m.__name__, n))
+    return deps, bound
 
 
 def _dump(tree: ast.AST) -> str:

@@ -358,7 +358,7 @@ def cond_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "json_struct_build",
-    survey="C16 GeoJSON Feature build (convert_traffic_csv_to_geojson_point.py:29-46); S8 FeatureCollection/NDJSON sinks in sources/geojson.py (tests/test_geojson.py)",
+    survey="C16 GeoJSON Feature build (convert_traffic_csv_to_geojson_point.py:29-46); S8 GeoJSON sink as one Feature JSON string per row (struct + to_json)",
     oracle="""
     SELECT event_id,
            printf('{"type":"Feature","geometry":{"type":"Point","coordinates":[%d,%d]},"properties":{"RequestID":%d,"Type":"%s"}}',
@@ -369,8 +369,7 @@ def cond_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 def json_struct_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row GeoJSON Feature via struct() + to_json — the declarative
     form of the reference's dict-building row loop. (Coordinates are
-    integers here so both engines print identical JSON; the real
-    geometry path is exercised in sources/geojson.py tests.)"""
+    integers here so both engines print identical JSON.)"""
     ev = load_table(spark, sf_dir, "events")
     feature = F.struct(
         F.lit("Feature").alias("type"),

@@ -181,10 +181,10 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_stream_join",
     survey="§2.12 stream-stream interval join (extension): purchases "
-    "within 30 min after a click by the same user — the batch-"
-    "equivalent registry entry for streaming/events.py::"
-    "correlate_streams (real two-stream run + watermark-eviction "
-    "semantics pinned in tests/test_streaming.py)",
+    "within 30 min after a click by the same user — "
+    "streaming/events.py::correlate_streams over the batch frames "
+    "(real two-stream run + watermark-eviction semantics pinned in "
+    "tests/test_streaming.py)",
     oracle="""
     WITH c AS (
       SELECT user_id, event_id AS click_id, ts AS click_ts
@@ -207,10 +207,10 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase attribution pairs: same user, purchase inside the
-    30 minutes after the click. This is the batch expression of the
-    watermarked stream-stream join (correlate_streams); identical join
-    predicate, so the streaming test's batch gold standard and this
-    oracle are the same semantics.
+    30 minutes after the click. This runs correlate_streams, the
+    watermarked stream-stream join, on the batch click and purchase
+    frames (the optimizer drops ``withWatermark`` from a batch plan), so
+    the oracle checks the exact join the stream runs.
 
     Scale shape: the EQUI key (user_id) drives the shuffle — both
     sides co-partition on user and the time predicate is a residual
@@ -218,27 +218,15 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode the same plan bounds its state with the two watermarks (a
     click older than the watermark can never match a future purchase
     and is evicted)."""
+    from nyc_traffic_insight_spark.streaming.events import correlate_streams
+
     ev = load_table(spark, sf_dir, "events")
-    c = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
+    pairs = correlate_streams(
+        ev.filter(F.col("event_type") == "click"),
+        ev.filter(F.col("event_type") == "purchase"),
     )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("amount"),
-    )
-    joined = c.join(p, "user_id").filter(
-        (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")
-        )
-    )
-    return joined.select(
-        "user_id",
+    return pairs.select(
+        F.col("c_user").alias("user_id"),
         "click_id",
         "purchase_id",
         (F.unix_timestamp("purchase_ts") - F.unix_timestamp("click_ts"))

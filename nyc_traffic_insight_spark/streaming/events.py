@@ -67,17 +67,6 @@ def sliding_counts(events: DataFrame, watermark: str | None = None) -> DataFrame
     )
 
 
-def read_event_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-source stream: new parquet files under source_dir become
-    micro-batches (maxFilesPerTrigger caps per-batch work — the
-    streaming analog of the reference's request rate limiter)."""
-    return (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(source_dir)
-    )
-
-
 def run_throttled_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -107,44 +96,6 @@ def run_throttled_ingest(
         stream.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_upsert_stream(
-    spark: SparkSession, source_dir: str, checkpoint_dir: str, out_dir: str
-) -> None:
-    """foreachBatch upsert sink: each micro-batch OVERWRITES exactly the
-    hour-partitions it touches (dynamic partition overwrite), so window
-    results are revised in place as late rows arrive instead of
-    appended as duplicates — the production pattern for materializing a
-    streaming aggregate exactly-once into a table.
-
-    Idempotent by construction: replaying a batch rewrites the same
-    partitions to the same content, so checkpoint replay after a crash
-    cannot double-count.
-    """
-    stream = read_event_stream(spark, source_dir)
-    # complete-mode agg state in the engine; per-batch diff lands below
-    agg = tumbling_counts(stream, watermark="2 hours")
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.withColumn("hour_part", F.date_format("window_start", "yyyyMMddHH"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("hour_part")
-            .parquet(out_dir)
-        )
-
-    (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

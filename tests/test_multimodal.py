@@ -12,10 +12,10 @@ import hashlib
 
 import numpy as np
 
+from nyc_traffic_insight_spark.operators import multimodal
 from nyc_traffic_insight_spark.operators.multimodal import (
     extract_features,
     sample_video_frames,
-    set_decoder,
     _fake_decode,
 )
 
@@ -58,17 +58,14 @@ def test_extract_features_partition_invariant(spark):
     assert sorted(a, key=key) == sorted(b, key=key)
 
 
-def test_decode_errors_are_rows_not_failures(spark):
+def test_decode_errors_are_rows_not_failures(spark, monkeypatch):
     def broken(payload: bytes, modality: str):
         if modality == "audio":
             raise ValueError("no audio codec")
         return _fake_decode(payload, modality)
 
-    set_decoder(broken)
-    try:
-        out = {r["asset_id"]: r for r in extract_features(_assets(spark)).collect()}
-    finally:
-        set_decoder(_fake_decode)
+    monkeypatch.setattr(multimodal, "_DECODER", broken)
+    out = {r["asset_id"]: r for r in extract_features(_assets(spark)).collect()}
     assert out[2]["ok"] is False
     assert "no audio codec" in out[2]["decode_error"]
     assert out[2]["features"] is None

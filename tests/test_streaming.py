@@ -28,37 +28,6 @@ def source_dir(spark, tmp_path):
     shutil.rmtree(src, ignore_errors=True)
 
 
-def test_foreachbatch_upsert_is_idempotent(spark, tmp_path, source_dir):
-    # the upsert sink overwrites touched hour-partitions per batch:
-    # final table equals the batch aggregate for every emitted window,
-    # with no duplicate (window, type) rows even across restarts.
-    from nyc_traffic_insight_spark.streaming.events import (
-        run_upsert_stream,
-        tumbling_counts,
-    )
-
-    mode = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(mode)
-    out = str(tmp_path / "upsert_out")
-    ckpt = str(tmp_path / "upsert_ckpt")
-    run_upsert_stream(spark, source_dir, ckpt, out)
-    got = spark.read.parquet(out).drop("hour_part")
-    keys = got.groupBy("window_start", "event_type").count()
-    assert keys.filter(F.col("count") > 1).count() == 0
-
-    batch = tumbling_counts(load_table(spark, SF_SMOKE, "events"))
-    full = {tuple(r) for r in batch.collect()}
-    emitted = {tuple(r) for r in got.collect()}
-    assert emitted and emitted <= full
-
-    # replay with the same checkpoint: nothing changes (idempotent)
-    n1 = spark.read.parquet(out).count()
-    run_upsert_stream(spark, source_dir, ckpt, out)
-    assert spark.read.parquet(out).count() == n1
-    # dynamic overwrite is the sink's write option, not session state
-    assert spark.conf.get(mode) == before
-
-
 def _run_stream_to_parquet(df, tmp_path, tag):
     out = str(tmp_path / f"{tag}_out")
     (
@@ -93,28 +62,10 @@ def test_stream_stream_join_matches_batch(spark, tmp_path, source_dir):
     )
     got = {tuple(r) for r in spark.read.parquet(out).collect()}
 
-    c = ev.filter(F.col("event_type") == t_click).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = ev.filter(F.col("event_type") == t_buy).select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("amount"),
-    )
-    want = {
-        tuple(r)
-        for r in c.join(
-            p,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        )
-        .select("c_user", "click_id", "click_ts", "purchase_id", "purchase_ts", "amount")
-        .collect()
-    }
+    def batch(t):
+        return ev.filter(F.col("event_type") == t)
+
+    want = {tuple(r) for r in correlate_streams(batch(t_click), batch(t_buy)).collect()}
     # append-mode emits pairs the watermark has finalized; all emitted
     # pairs must be real, and the vast majority of pairs are emitted
     assert got <= want
