@@ -10,7 +10,9 @@ round's correctness file lands.
 """
 
 import ast
+import dis
 import hashlib
+import importlib.util
 import inspect
 import json
 import os
@@ -99,9 +101,13 @@ def reach(code, mod: str, registry: dict) -> tuple[list, list[tuple[str, str]]]:
     """One closure step: the package functions ``code`` (nested code
     included) reaches, and the ``(module, name)`` of every other package
     binding it reads. Names resolve through module ``mod``'s globals
-    (``""`` for a script outside the package) and through package
-    modules bound there or imported inside the code; a string constant
-    that names a registered query reaches its builder."""
+    (``""`` for a script outside the package) and through the package
+    modules the code imports; a string constant that names a registered
+    query reaches its builder. A module-valued attribute is followed
+    only when an import statement binds it, in the code or at the top
+    level of the module that holds it: importing a submodule also sets
+    it on its parent package, so following any module attribute would
+    make the closure depend on what the process happened to import."""
     codes = [code]
     for co in codes:  # grows by each nested code object
         codes += [c for c in co.co_consts if inspect.iscode(c)]
@@ -109,13 +115,22 @@ def reach(code, mod: str, registry: dict) -> tuple[list, list[tuple[str, str]]]:
     strs = {c for co in codes for c in co.co_consts if isinstance(c, str)}
     deps = [registry[c].builder for c in strs & registry.keys()]
     bound = []
-    mods = [sys.modules[n] for n in {mod} | names
-            if n.startswith(_PKG) and n in sys.modules]
+    mods, last = [sys.modules[mod]] if mod.startswith(_PKG) else [], None
+    for co in codes:  # the package modules the code imports, as running it would
+        for i in dis.get_instructions(co):
+            if i.opname == "IMPORT_NAME":
+                last = importlib.import_module(i.argval) if i.argval.startswith(_PKG) else None
+                mods += [last] if last else []
+            elif i.opname == "IMPORT_FROM" and hasattr(last, "__path__"):
+                sub = f"{last.__name__}.{i.argval}"  # ``from package import submodule``
+                if importlib.util.find_spec(sub):
+                    mods.append(importlib.import_module(sub))
     for m in mods:  # grows by each package module a name binds
         for n in names & vars(m).keys():
             v = vars(m)[n]
             if inspect.ismodule(v):
-                if v.__name__.startswith(_PKG) and v not in mods:
+                if (v.__name__.startswith(_PKG) and v not in mods
+                        and n in _imports(m.__name__)):
                     mods.append(v)
             elif inspect.isfunction(v):
                 if str(v.__module__).startswith(_PKG):
@@ -123,6 +138,20 @@ def reach(code, mod: str, registry: dict) -> tuple[list, list[tuple[str, str]]]:
             else:
                 bound.append((m.__name__, n))
     return deps, bound
+
+
+def _imports(mod: str) -> set[str]:
+    """The names that module ``mod``'s top-level import statements bind."""
+    todo, out = list(ast.parse(inspect.getsource(sys.modules[mod])).body), set()
+    for st in todo:  # grows by the bodies of if/try blocks
+        if isinstance(st, ast.Import):
+            out |= {a.asname or a.name.split(".")[0] for a in st.names}
+        elif isinstance(st, ast.ImportFrom):
+            out |= {a.asname or a.name for a in st.names}
+        elif not isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            for f in ("body", "orelse", "finalbody", "handlers"):
+                todo += getattr(st, f, ())
+    return out
 
 
 def _dump(tree: ast.AST) -> str:

@@ -222,6 +222,36 @@ def test_fingerprints_ignore_hash_seed_and_checkout_path(tmp_path):
     assert len(fp_a) == len(load_all())
 
 
+def test_fingerprints_ignore_import_order():
+    """A process that imports more of the package than ``load_all()``
+    does (a test session, a tool that imports ``serving`` first)
+    computes the same fingerprints. Importing a submodule sets it as an
+    attribute of its parent package, so a closure that followed any
+    module attribute would grow with what the process imported."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import importlib, json, pkgutil, nyc_traffic_insight_spark as p\n"
+        "from nyc_traffic_insight_spark.queries import load_all, rotation\n"
+        "reg = load_all()\n"
+        "before = rotation.fingerprints(reg)\n"
+        "for m in pkgutil.walk_packages(p.__path__, p.__name__ + '.'):\n"
+        "    importlib.import_module(m.name)\n"
+        "after = rotation.fingerprints(reg)\n"
+        "print(json.dumps(sorted(n for n in before if before[n] != after[n])))"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=dict(os.environ, PYTHONPATH=""),
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert json.loads(r.stdout.splitlines()[-1]) == []
+
+
 def test_duck_connect_skips_directory_without_part_files(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

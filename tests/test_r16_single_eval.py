@@ -3,8 +3,10 @@
 The r15 lambda-let sweep (tests/test_r15_single_eval.py) missed the
 tokenizer-shaped scans: its marker list had no ``split(`` /
 ``regexp_replace(`` / ``filter(``. The extended tools/expr_dup_sweep.py
-found three operators whose O(len) text scans were re-inlined by
-projection collapse into every consumer column:
+(a one-off that counted those markers in every optimized plan of the
+registry; since deleted, these pins hold what it found) found three
+operators whose O(len) text scans were re-inlined by projection
+collapse into every consumer column:
 
 - text_gopher_rules: 41 ``split(`` sites (the `keep` conjunction alone
   re-evaluated all four counts) -> 3;
