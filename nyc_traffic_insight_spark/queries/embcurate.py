@@ -1,20 +1,23 @@
 """Catalog: embedding-curation operators (the D4 pipeline tier).
 
-Built as round-11 previews, REGISTERED round 12 (the sanctioned
-promotion): `dedup_semantic` (SemDeDup, Abbas et al. 2023 —
-within-cluster cosine-threshold pruning), `emb_prototypes_filter`
-(SSL Prototypes, Sorscher et al. 2022 / D4, Tirumala et al. 2023 —
-prune the most-prototypical tenth per cluster), and the composed
+`dedup_semantic` (SemDeDup, Abbas et al. 2023 — within-cluster
+cosine-threshold pruning), `emb_prototypes_filter` (SSL Prototypes,
+Sorscher et al. 2022 / D4, Tirumala et al. 2023 — prune the
+most-prototypical tenth per cluster), and the composed
 `pipeline_d4_curation` (SemDeDup, then the prototype prune re-scoped
 to the survivors — D4's two stages end-to-end). All three run on
 textops' deterministic label-derived centroid artifact, so all three
 carry FULL value-hash DuckDB oracles built from ONE shared
-centroid-assignment CTE fragment (the texts cannot drift). Scale
+centroid-assignment CTE fragment (the texts cannot drift), and all
+three route vectors with textops' one nearest-centroid scorer
+(_cells_lit / _ranked_cells), the one the IVF tiers use. Scale
 arguments: SCALE.md "Dedup / similarity / sketches"; tests:
 tests/test_semdedup.py, test_proto_filter.py, test_d4_pipeline.py.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,15 +26,20 @@ from nyc_traffic_insight_spark.queries import register
 
 from nyc_traffic_insight_spark.functions.rounding import r as _r
 from nyc_traffic_insight_spark.queries.textops import (
+    _CELLS_T,
     _DIM,
+    _cells_lit,
+    _cells_payload,
+    _dot,
     _embs,
     _fold_idx_sql,
     _ivf_centroids,
-    _norm_dot,
+    _norm,
+    _ranked_cells,
 )
 
 
-# ------------------------- SemDeDup (round-11 preview)
+# ------------------------- SemDeDup
 #
 # dedup_embedding_cosine is the brute-force O(n²) recall baseline;
 # SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -40,14 +48,13 @@ from nyc_traffic_insight_spark.queries.textops import (
 # with a coarse quantizer, then prune near-duplicates WITHIN each
 # cluster only — the pair cost drops from O(n²) to Σ|cell|², bounded
 # by construction when k scales with the corpus (the paper runs
-# k≈110k on LAION; here k=|labels|=10 at test SF). This preview
-# composes the two machines the catalog already trusts: the
-# deterministic label-derived centroid artifact of sim_search_ivf_topk
-# (per-component mean rounded 6dp — both engines hold bit-identical
-# centroids, so the FULL pipeline gets a value-hash oracle, no
-# contract-audit fallback needed) and dedup_embedding_cosine's
-# raw-double cosine-threshold compare (bit-identical sequential
-# accumulation, proven across rounds).
+# k≈110k on LAION; here k=|labels|=10 at test SF). This composes the
+# two machines the catalog already trusts: the deterministic
+# label-derived centroid artifact of sim_search_ivf_topk (per-component
+# mean rounded 6dp — both engines hold bit-identical centroids, so the
+# FULL pipeline gets a value-hash oracle, no contract-audit fallback
+# needed) and dedup_embedding_cosine's raw-double cosine-threshold
+# compare (bit-identical sequential accumulation).
 #
 # Keep rule (deterministic, the paper keeps a random point per dup
 # group): a vector is PRUNED iff some SAME-CELL vector with a SMALLER
@@ -56,29 +63,28 @@ from nyc_traffic_insight_spark.queries.textops import (
 # iterative closure (unlike dedup_connected_components).
 #
 # Scale shape: assignment is the NARROW literal-centroid array_sort
-# (zero shuffle, zero broadcast jobs — the sim_search_ivf_topk r4
-# rework); the only corpus shuffles are the self-equi-join on cell
-# (the bucketing SemDeDup exists to create) and the per-vector witness
-# groupBy. Built as a round-11 preview; registered (with
-# oracle=dedup_semantic_oracle_sql()) in the sanctioned r12 promotion.
+# (zero shuffle, zero broadcast jobs, the sim_search_ivf_topk shape);
+# the only corpus shuffles are the self-equi-join on cell (the
+# bucketing SemDeDup exists to create) and the per-vector witness
+# groupBy.
 
 _SEMDEDUP_THRESH = 0.4  # same near-dup line as dedup_embedding_cosine
 
-# ------------- scale-k-with-n cell index (r15; VERDICT r14 #5)
+# ------------- scale-k-with-n cell index
 #
 # SemDeDup's pair term is Σ|cell|²: bounded ONLY when the cell count
-# scales with the corpus (the paper's k≈110k on LAION). The r14 decade
-# probe measured ×9.8–14.2 wall per 10× vectors at the FIXED k=10
-# label index — the documented contract ("scale k with n") was not in
-# the code. It now is: k = 10·m cells with
+# scales with the corpus (the paper's k≈110k on LAION); at a fixed
+# k=10 label index the wall grew ×9.8–14.2 per 10× vectors. So the
+# index has k = 10·m cells with
 #
 #   m = max(1, ceil(n / (10 · _SEMDEDUP_TARGET_OCC)))
 #
 # i.e. target mean occupancy _SEMDEDUP_TARGET_OCC per cell. At every
 # gate SF (n ≤ 2000) m = 1 and the index IS the label-centroid
-# artifact — bit-identical outputs to r14. Past that, each label's
-# cell splits into m sub-cells by equal-width buckets of the vector's
-# cosine to its OWN label centroid — a LOCALITY-PRESERVING scalar
+# artifact. Past that, each label's cell splits into m sub-cells by
+# equal-width buckets of the vector's cosine to its OWN label
+# centroid (read from the same cell literal the assignment scores
+# against) — a LOCALITY-PRESERVING scalar
 # (|cos(a,c) − cos(b,c)| is bounded by the a↔b angle, so near-dups
 # share a bucket except at bucket boundaries, the loss any space
 # partitioning pays), unlike a hash subdivision which would cut
@@ -90,51 +96,44 @@ _SEMDEDUP_THRESH = 0.4  # same near-dup line as dedup_embedding_cosine
 _SEMDEDUP_TARGET_OCC = 200
 _SEMDEDUP_DIV = 10 * _SEMDEDUP_TARGET_OCC
 
-# Third assignment level (r16; VERDICT r15 #9). Two-level assignment
-# is (10 + m)·dim per vector, so at m = 100 (200k vectors) the
-# assignment term re-grows linearly with the corpus. When m reaches
-# _SEMDEDUP_L3_MIN_M the per-label sub-cell list is split into
-# mid-groups of g = ceil(sqrt(m)) CONSECUTIVE cos-buckets (the
-# sub-cells are equal-width buckets of own_cos, so consecutive
-# buckets are spatial neighbours and a group is a contiguous cos
-# band). The mid-group's representative is its MEDIAN member's
-# sub-centroid — a selection, not new float arithmetic, so both
-# engines pick byte-identical reps with no summation-order hazard.
-# Assignment becomes nearest label (10) → nearest mid rep (≈√m) →
-# nearest sub-cell within that group (≤ g = ⌈√m⌉): O(√m)·dim, the
-# documented log-depth ladder's next rung. Below the gate the
-# formula DEGENERATES (g = m → one mid-group per label, whose only
-# rep search is a 1-row window) so every m < 100 result — including
-# every driver-checked SF, where m = 1 — is bit-identical to the
-# two-level r15 shape; the oracle text carries the same general
-# form (see _centroid_assign_cte).
+# Hierarchical assignment (m > 1): nearest label (10) → nearest
+# mid-group rep → nearest sub-cell within that group. A mid-group is
+# g CONSECUTIVE cos-buckets of one label (the sub-cells are
+# equal-width buckets of own_cos, so consecutive buckets are spatial
+# neighbours and a group is a contiguous cos band); its
+# representative is its MEDIAN member's sub-centroid — a selection,
+# not new float arithmetic, so both engines pick byte-identical reps
+# with no summation-order hazard. g = ceil(sqrt(m)) once m reaches
+# _SEMDEDUP_L3_MIN_M, which makes the per-vector cost O(√m)·dim
+# instead of (10 + m)·dim; below it g = m, so each label has ONE
+# mid-group and the assignment is nearest label → nearest of that
+# label's sub-cells. The oracle text carries the same general form
+# (see _centroid_assign_cte).
 _SEMDEDUP_L3_MIN_M = 100
 
 
-def _semdedup_cells(spark: SparkSession, sf_dir: str) -> list:
-    """The D4 tier's scaled centroid index [[cell, cvec], ...] —
-    content-addressed on disk like the base artifact (artifacts.py)."""
+def _semdedup_index(spark: SparkSession, sf_dir: str) -> dict:
+    """The D4 tier's scaled centroid index {"m", "labels", "cells"}:
+    the 10-row label level and the [[cell, cvec], ...] sub-cell table
+    (cell = label·m + bucket), as ONE content-addressed artifact
+    (artifacts.py) so the levels can never drift."""
     from nyc_traffic_insight_spark.artifacts import cached_json
 
-    def _build() -> list:
+    def _build() -> dict:
         e = _embs(spark, sf_dir)
         n = e.count()
         m = max(1, (n + _SEMDEDUP_DIV - 1) // _SEMDEDUP_DIV)
-        base = _ivf_centroids(spark, sf_dir)
+        base = [[int(c), list(vec)] for c, vec in _ivf_centroids(spark, sf_dir)]
         if m == 1:
-            return [[int(c), list(vec)] for c, vec in base]
-        cmap = F.create_map(
-            *[
-                x
-                for c, vec in base
-                for x in (F.lit(c), F.array(*[F.lit(v) for v in vec]))
-            ]
+            return {"m": m, "labels": base, "cells": base}
+        own = F.element_at(
+            F.filter(F.col("lcells"), lambda c: c["cell"] == F.col("label")), 1
         )
-        scored = e.select(
-            "vec_id",
+        emb = F.col("embedding")
+        scored = e.withColumn("lcells", _cells_lit(base)).select(
             "label",
             "embedding",
-            _norm_dot(F.col("embedding"), cmap[F.col("label")]).alias(
+            (_dot(emb, own["cvec"]) / (_norm(emb) * own["nrm"])).alias(
                 "own_cos"
             ),
         )
@@ -169,36 +168,11 @@ def _semdedup_cells(spark: SparkSession, sf_dir: str) -> list:
                 lambda x: x["c"],
             ).alias("cvec")
         )
-        return sorted(
+        cells = sorted(
             [int(row["cell0"]), list(row["cvec"])]
             for row in centroids.collect()
         )
-
-    return cached_json(
-        "semdedup_cells",
-        sf_dir,
-        ["embeddings"],
-        {"occ": _SEMDEDUP_TARGET_OCC},
-        _build,
-    )
-
-
-def _semdedup_index(spark: SparkSession, sf_dir: str) -> dict:
-    """The full scaled index: {"m", "labels", "cells"} — the sub-cell
-    table plus the 10-row label level the two-level assignment scores
-    first (r15; one content-addressed artifact so the two levels can
-    never drift)."""
-    from nyc_traffic_insight_spark.artifacts import cached_json
-
-    def _build() -> dict:
-        e = _embs(spark, sf_dir)
-        n = e.count()
-        m = max(1, (n + _SEMDEDUP_DIV - 1) // _SEMDEDUP_DIV)
-        labels = [
-            [int(c), list(vec)] for c, vec in _ivf_centroids(spark, sf_dir)
-        ]
-        cells = _semdedup_cells(spark, sf_dir)
-        return {"m": m, "labels": labels, "cells": cells}
+        return {"m": m, "labels": base, "cells": cells}
 
     return cached_json(
         "semdedup_index",
@@ -210,243 +184,93 @@ def _semdedup_index(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def _assigned_frame(e: DataFrame, index, with_cos: bool) -> DataFrame:
-    """One narrow assignment pass → (vec_id, embedding, cell
+    """One narrow assignment pass → (vec_id, embedding, __na, cell
     [, own_cos]). Built FRESH per call: higher-order-function lambda
     variables carry expression ids, and reusing one plan object on
     both sides of a self-join makes Catalyst's branch dedup lose the
     inner lambda refs at bind time
     (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on uncached inputs).
 
-    `index` is either a flat [[cell, cvec], ...] list (single-level:
-    score every cell in-row — tests and the m = 1 gate shape) or the
-    _semdedup_index dict with m > 1, which switches to TWO-LEVEL
-    scoring (r15): nearest of the 10 label centroids first, then
-    nearest of that label's own sub-centroids — per-vector cost
-    (10 + m)·dim instead of (10·m)·dim. Without this the scaled
-    index's assignment re-grows the very term the index removes (the
-    clean decade probe read the flat-k=99 assignment at 2×5.1 s of
-    dedup_semantic's 14.4 s wall at 20k vectors). Tie-breaks are
-    (cos DESC, cell ASC) at BOTH levels — the oracle's two window
-    ORDER BYs."""
+    `index` is either a flat [[cell, cvec], ...] list or the
+    _semdedup_index dict. A flat list, or m = 1, scores every cell
+    in-row. m > 1 runs the hierarchical label → mid → cell assignment
+    (see _SEMDEDUP_L3_MIN_M); scoring the flat k = 10·m cells instead
+    re-grows the very term the scaled index removes (5.1 s of each
+    assignment pass in a 14.4 s dedup_semantic at 20k vectors).
+    Tie-breaks are (cos DESC, id ASC) at every level — the oracle's
+    window ORDER BYs.
 
-    import math
-
-    # Scoring-cost note (r15, measured): _norm_dot inside the lambda
-    # evaluated FOUR 64-element aggregates per (row, cell) — the dot,
-    # the constant cell norm, and the row norm twice over. Each cell's
-    # norm now rides the index literal as `nrm`, computed in Python
-    # with the IDENTICAL sequential float64 accumulation + sqrt — so
-    # cos = dot / (na · nrm) is bit-for-bit the _norm_dot value and
-    # the oracle's list_cosine_similarity at 3/5 the per-cell op
-    # count. The row norm is deliberately NOT hoisted to a column and
-    # referenced from the lambda: CollapseProject inlines a
-    # withColumn-defined expression into every use site, so an
-    # "attribute read" inside the lambda silently becomes the full
-    # aggregate re-evaluated per element ANYWAY — plus a second copy
-    # at every other use (measured: the hoisted form was ~40% SLOWER
-    # than recomputing na inline). __na IS emitted as an output
-    # column (one evaluation in the output projection) because the
-    # witness pair stage downstream reads it across the join boundary,
-    # where it is genuinely materialized.
-    na_expr = F.sqrt(
-        F.aggregate(
-            F.col("embedding"),
-            F.lit(0.0),
-            lambda acc, v: acc + v.cast("double") * v.cast("double"),
-        )
-    )
-
-    def _pynorm(vec) -> float:
-        s = 0.0
-        for v in vec:
-            s += float(v) * float(v)
-        return math.sqrt(s)
-
-    def _scored(cand_col):
-        def cos(c):
-            dot = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    c["cvec"],
-                    lambda x, y: x.cast("double") * y.cast("double"),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            return dot / (na_expr * c["nrm"])
-
-        return F.transform(
-            cand_col,
-            lambda c: F.struct(
-                (-cos(c)).alias("negcos"),
-                c["cell"].alias("cell"),
-            ),
-        )
-
-    # ONE F.expr per literal table, not one F.lit per double: every
-    # F.lit/F.struct/F.array is a py4j round trip, and the scaled
-    # index is ~26k of them per assignment branch — measured 11–18 s
-    # of pure PYTHON-side plan building per dedup_semantic call at
-    # m = 10 (the box sat idle; the walls looked like execution but
-    # were driver-side py4j). r16: the expr is now a constant-foldable
-    # from_json literal (textops._fold_idx_sql) — the r15 CAST-text
-    # tree still cost O(k·dim) nodes PER ANALYZER RUN on every
-    # DataFrame op over the frame, and the scale-k index grows that
-    # tree with the corpus; the from_json string is a 2-node tree at
-    # any index size and folds to the bit-identical constant (repr ↔
-    # parseDouble round-trip, same law the CAST spelling used).
-    _CELLS_T = "ARRAY<STRUCT<cell: INT, cvec: ARRAY<DOUBLE>, nrm: DOUBLE>>"
-
-    def _cells_payload(pairs) -> list:
-        return [
-            {
-                "cell": int(cell),
-                "cvec": [float(v) for v in vec],
-                "nrm": _pynorm(vec),
-            }
-            for cell, vec in pairs
-        ]
-
-    def _lit_cells(pairs):
-        return F.expr(_fold_idx_sql(_cells_payload(pairs), _CELLS_T))
-
-    two_level = isinstance(index, dict) and index["m"] > 1
-    if not two_level:
+    Every level is ONE from_json literal (textops._fold_idx_sql), not
+    one F.lit per double: a py4j call per value cost 11–18 s of
+    driver-side plan building per dedup_semantic call at m = 10, and a
+    CAST-text tree costs O(k·dim) nodes per analyzer run. __na is an
+    output column because the witness pair stage downstream reads it
+    across the join boundary, where it is genuinely materialized."""
+    best = F.element_at(_ranked_cells(F.col("cand")), 1)
+    out = [
+        F.col("vec_id"),
+        F.col("embedding"),
+        _norm(F.col("embedding")).alias("__na"),
+        best["cell"].cast("int").alias("cell"),
+    ]
+    if with_cos:
+        out.append((-best["negcos"]).alias("own_cos"))
+    if not isinstance(index, dict) or index["m"] == 1:
         cells = index["cells"] if isinstance(index, dict) else index
-        best = F.element_at(F.array_sort(_scored(F.col("cells"))), 1)
-        out = [
-            F.col("vec_id"),
-            F.col("embedding"),
-            F.col("__na"),
-            best["cell"].cast("int").alias("cell"),
-        ]
-        if with_cos:
-            out.append((-best["negcos"]).alias("own_cos"))
-        return (
-            e.withColumn("__na", na_expr)
-            .withColumn("cells", _lit_cells(cells))
-            .select(*out)
-        )
+        return e.withColumn("cand", _cells_lit(cells)).select(*out)
 
+    # label → mid → sub-cells, as label- and mid-indexed ARRAY
+    # literals, not maps: GetMapValue on a literal map of
+    # array-of-struct values measured 6× slower per row than
+    # GetArrayItem (the map scan compares/copies complex values, the
+    # array index is a reference read). mid = (cell % m) // g over the
+    # OCCUPIED cells; absent labels and buckets leave empty
+    # placeholders, never selected because the label and mid picks
+    # come from occupied entries only.
     m = index["m"]
+    g = math.ceil(math.sqrt(m)) if m >= _SEMDEDUP_L3_MIN_M else m
     by_label: dict = {}
     for cell0, vec in index["cells"]:
-        by_label.setdefault(cell0 // m, []).append((cell0, vec))
-    # label → sub-cell list as a label-value-indexed ARRAY literal, not
-    # a map: GetMapValue on a literal map of array-of-struct values
-    # measured 6× slower per row than GetArrayItem (6.6 s vs 1.1 s for
-    # the 20k-vector assignment pass) — the map scan compares/copies
-    # complex values, the array index is a reference read. Labels are
-    # small non-negative ints; missing labels get empty placeholders
-    # (never selected — lbl_best comes from the existing labels).
+        by_label.setdefault(cell0 // m, {}).setdefault(
+            (cell0 % m) // g, []
+        ).append((cell0, vec))
     max_lbl = max(by_label)
     if max_lbl > 10_000:
         raise ValueError(
             f"label space too large to array-index ({max_lbl}); "
             "re-introduce a position lookup before raising this cap"
         )
-    lbl_best = F.element_at(
-        F.array_sort(_scored(F.col("lcells"))), 1
-    )["cell"]
-    best = F.element_at(F.array_sort(_scored(F.col("cand"))), 1)
-    out = [
-        F.col("vec_id"),
-        F.col("embedding"),
-        F.col("__na"),
-        best["cell"].cast("int").alias("cell"),
-    ]
-    if with_cos:
-        out.append((-best["negcos"]).alias("own_cos"))
-
-    if m >= _SEMDEDUP_L3_MIN_M:
-        # THREE-level assignment (r16; see _SEMDEDUP_L3_MIN_M). The
-        # per-label table becomes label → mid-group → cells, with a
-        # parallel label → mid-rep table; both ride ONE from_json
-        # literal each (2-node analyzed trees at any index size).
-        # mid = (cell % m) // g over the OCCUPIED cells, so absent
-        # buckets leave empty placeholder groups (never selected —
-        # mid_best comes from the reps of occupied groups only). The
-        # rep struct reuses the `cell` field name for the mid id so
-        # _scored's (negcos, cell) tie-break IS the oracle's
-        # (cos DESC, mid ASC) window order.
-        g = math.ceil(math.sqrt(m))
-        reps_payload: list = []
-        cells3_payload: list = []
-        for lbl in range(max_lbl + 1):
-            by_mid: dict = {}
-            for cell0, vec in by_label.get(lbl, []):
-                by_mid.setdefault((cell0 % m) // g, []).append(
-                    (cell0, vec)
-                )
-            n_mid = (max(by_mid) + 1) if by_mid else 0
-            reps = []
-            mids_cells = []
-            for mid in range(n_mid):
-                grp = by_mid.get(mid, [])
-                mids_cells.append(_cells_payload(grp))
-                if grp:
-                    rep_vec = grp[len(grp) // 2][1]
-                    reps.append(
-                        {
-                            "cell": int(mid),
-                            "cvec": [float(v) for v in rep_vec],
-                            "nrm": _pynorm(rep_vec),
-                        }
-                    )
-            reps_payload.append(reps)
-            cells3_payload.append(mids_cells)
-        reps_arr = F.expr(
-            _fold_idx_sql(reps_payload, f"ARRAY<{_CELLS_T}>")
-        )
-        cells3_arr = F.expr(
-            _fold_idx_sql(cells3_payload, f"ARRAY<ARRAY<{_CELLS_T}>>")
-        )
-
-        def _l3_cand(lb):
-            # lb is a lambda variable (opaque to CollapseProject), so
-            # the 10-label scoring behind lbl_best runs ONCE per row
-            # even though the label picks both the rep list and the
-            # cell table.
-            lbi = lb.cast("int") + 1
-            mid_best = F.element_at(
-                F.array_sort(_scored(F.element_at(F.col("repsarr"), lbi))),
-                1,
-            )["cell"]
-            return F.element_at(
-                F.element_at(F.col("cells3"), lbi),
-                mid_best.cast("int") + 1,
+    reps, mids = [], []
+    for lbl in range(max_lbl + 1):
+        by_mid = by_label.get(lbl, {})
+        grps = [by_mid.get(mid, []) for mid in range(max(by_mid, default=-1) + 1)]
+        # the rep reuses the `cell` field for the mid id, so the
+        # (negcos, cell) sort IS the oracle's (cos DESC, mid ASC) order
+        reps.append(
+            _cells_payload(
+                [(mid, grp[len(grp) // 2][1]) for mid, grp in enumerate(grps) if grp]
             )
-
-        return (
-            e.withColumn("__na", na_expr)
-            .withColumn("lcells", _lit_cells(index["labels"]))
-            .withColumn("repsarr", reps_arr)
-            .withColumn("cells3", cells3_arr)
-            .withColumn(
-                "cand",
-                F.element_at(F.transform(F.array(lbl_best), _l3_cand), 1),
-            )
-            .select(*out)
         )
+        mids.append([_cells_payload(grp) for grp in grps])
 
-    # the whole label-indexed table as ONE from_json literal (r16):
-    # the analyzed tree stays 2 nodes as m (and the index) grows
-    subs_arr = F.expr(
-        _fold_idx_sql(
-            [
-                _cells_payload(by_label.get(lbl, []))
-                for lbl in range(max_lbl + 1)
-            ],
-            f"ARRAY<{_CELLS_T}>",
-        )
-    )
+    def _cand(lb):
+        # lb is a lambda variable (opaque to CollapseProject), so the
+        # label scoring runs ONCE per row even though the label picks
+        # both the rep list and the cell table
+        lbi = lb.cast("int") + 1
+        mid = F.element_at(
+            _ranked_cells(F.element_at(F.col("reps"), lbi)), 1
+        )["cell"]
+        return F.element_at(F.element_at(F.col("mids"), lbi), mid.cast("int") + 1)
+
+    lbl = F.element_at(_ranked_cells(F.col("labels")), 1)["cell"]
     return (
-        e.withColumn("__na", na_expr)
-        .withColumn("lcells", _lit_cells(index["labels"]))
-        .withColumn("subsarr", subs_arr)
+        e.withColumn("labels", _cells_lit(index["labels"]))
+        .withColumn("reps", F.expr(_fold_idx_sql(reps, f"ARRAY<{_CELLS_T}>")))
         .withColumn(
-            "cand", F.element_at(F.col("subsarr"), lbl_best.cast("int") + 1)
+            "mids", F.expr(_fold_idx_sql(mids, f"ARRAY<ARRAY<{_CELLS_T}>>"))
         )
+        .withColumn("cand", F.element_at(F.transform(F.array(lbl), _cand), 1))
         .select(*out)
     )
 
@@ -464,30 +288,21 @@ def semdedup_frame(
     groupBy as a key so the composed D4 pipeline can window over this
     frame directly instead of re-running the assignment; the default
     keeps dedup_semantic's shuffle rows 8 bytes narrower."""
-    def _assigned() -> DataFrame:
-        # Narrow assignment (single- or two-level per the index shape;
-        # see _assigned_frame). Built FRESH per join side — the lambda
-        # bind-time caveat in _assigned_frame's docstring.
-        return _assigned_frame(e, cells, with_cos)
-
     # Within-cell witness search: equi-join on cell (bucketed by
     # construction), keep earlier-id pairs above the threshold, take
     # the MINIMUM witness per pruned vector (deterministic dup_of).
     #
-    # TWO assignment passes, not three (ADVICE r11). The r11 preview
-    # self-joined on strictly-earlier ids (a < b) and then LEFT-joined
-    # a third assignment branch back on vec_id to restore the kept
-    # vectors. Admitting the SELF-pair (a <= b) instead guarantees
-    # every vector reaches the groupBy — its own row carries (vec_id,
-    # cell) — so the third corpus-wide assignment branch AND the final
-    # vec_id shuffle join disappear (plan probe: 3 → 2 in-memory
-    # assignment scans, 9 → 6 exchanges). The witness condition stays
-    # strict (a < b, cos > thresh) inside the aggregate; the n extra
-    # self-pair cosine evaluations are noise next to the Σ|cell|² pair
-    # term. The two sides must still be DISTINCT plan objects (the
-    # lambda bind-time workaround above).
-    a = _assigned().alias("a")
-    b = _assigned().alias("b")
+    # TWO assignment passes, not three: admitting the SELF-pair
+    # (a <= b) guarantees every vector reaches the groupBy — its own
+    # row carries (vec_id, cell) — so no third corpus-wide assignment
+    # branch and vec_id join are needed to restore the kept vectors
+    # (3 → 2 in-memory assignment scans, 9 → 6 exchanges). The witness
+    # condition stays strict (a < b, cos > thresh) inside the
+    # aggregate; the n extra self-pair cosine evaluations are noise
+    # next to the Σ|cell|² pair term. The two sides must be DISTINCT
+    # plan objects (the lambda bind-time caveat in _assigned_frame).
+    a = _assigned_frame(e, cells, with_cos).alias("a")
+    b = _assigned_frame(e, cells, with_cos).alias("b")
     keys = [
         F.col("b.vec_id").alias("vec_id"),
         F.col("b.cell").alias("cell"),
@@ -521,21 +336,10 @@ def semdedup_frame(
                         # pair cosine from the carried __na norms —
                         # dot / (na·nb), the exact _norm_dot grouping,
                         # so the double (and the oracle hash) is
-                        # unchanged while the per-pair op count drops
-                        # from four 64-element aggregates to two
-                        (
-                            F.aggregate(
-                                F.zip_with(
-                                    F.col("a.embedding"),
-                                    F.col("b.embedding"),
-                                    lambda x, y: x.cast("double")
-                                    * y.cast("double"),
-                                ),
-                                F.lit(0.0),
-                                lambda acc, v: acc + v,
-                            )
-                            / (F.col("a.__na") * F.col("b.__na"))
-                        )
+                        # unchanged while each pair pays one dot
+                        # product instead of a dot and two norms
+                        _dot(F.col("a.embedding"), F.col("b.embedding"))
+                        / (F.col("a.__na") * F.col("b.__na"))
                         > F.lit(float(thresh))
                     ),
                     F.col("a.vec_id"),
@@ -554,27 +358,22 @@ def _centroid_assign_cte(table: str) -> str:
     to its OWN centroid (the prototypicality score — unchanged by any
     downstream filtering, since the centroids are a fixed artifact).
 
-    r15: recomputes the scale-k index (_semdedup_cells) — m from the
-    same integer formula, buckets from the same IEEE expression
+    Recomputes the scale-k index (_semdedup_index) — m from the same
+    integer formula, buckets from the same IEEE expression
     (((own_cos − mn) · m) / (mx − mn), floored, least-capped), sub-cell
-    centroids from the same round(avg, 6) — and assigns TWO-LEVEL
-    exactly like the Spark side (_assigned_frame): nearest label
-    centroid (lrn window), then nearest sub-centroid of that label
-    (rn window over c.cell // m = lbl). At every gate SF m = 1, every
-    bucket is 0, each label has one sub-cell, and the chain
-    degenerates to the r14 single-window label-mean assignment
-    byte-for-byte in VALUES (the text itself carries the general
-    form).
-
-    r16 (VERDICT r15 #9): a MID level between the label and sub-cell
-    windows — g consecutive cos-buckets per mid-group with
-    g = ceil(sqrt(m)) once m >= _SEMDEDUP_L3_MIN_M, else g = m so
-    every smaller scale degenerates to ONE mid-group per label and
-    the chain is the two-level r15 text value-for-value. The
-    mid-group rep is its median member's sub-centroid (rn = cnt//2+1
-    ordered by cell — a SELECTION, no new float arithmetic, so both
-    engines agree bit-for-bit), mirroring _assigned_frame's
-    grp[len(grp) // 2] exactly."""
+    centroids from the same round(avg, 6) — and assigns exactly like
+    the Spark side (_assigned_frame): nearest label centroid (lrn
+    window), nearest mid-group rep of that label (mrn window), then
+    nearest sub-centroid of that group (rn window). A mid-group is g
+    consecutive cos-buckets with g = ceil(sqrt(m)) once
+    m >= _SEMDEDUP_L3_MIN_M, else g = m (ONE mid-group per label);
+    its rep is its median member's sub-centroid (rn = cnt//2+1 ordered
+    by cell — a SELECTION, no new float arithmetic, so both engines
+    agree bit-for-bit), mirroring _assigned_frame's
+    grp[len(grp) // 2] exactly. At every gate SF m = 1, every bucket
+    is 0, each label has one sub-cell, and the chain's VALUES are the
+    single-window label-mean assignment's (the text itself carries the
+    general form)."""
     return f"""
     WITH mval AS (
       SELECT GREATEST(1, (count(*) + {_SEMDEDUP_DIV - 1}) // {_SEMDEDUP_DIV})
@@ -727,14 +526,13 @@ def dedup_semantic(
 ) -> DataFrame:
     """SemDeDup over the embeddings table: cluster by the label-derived
     centroid artifact, prune within-cluster cosine near-duplicates,
-    keep the minimum vec_id. Round-11 preview promoted in round 12.
-    Output: (vec_id, cell, is_kept, dup_of)."""
+    keep the minimum vec_id. Output: (vec_id, cell, is_kept, dup_of)."""
     return semdedup_frame(
         _embs(spark, sf_dir), _semdedup_index(spark, sf_dir), thresh
     )
 
 
-# ------------------- SSL-prototype filter (round-11 second preview)
+# ------------------- SSL-prototype filter
 #
 # D4 (Tirumala et al. 2023, "D4: Improving LLM Pretraining via
 # Document De-Duplication and Diversification") runs TWO embedding
@@ -752,8 +550,6 @@ def dedup_semantic(
 # shuffle), one groupBy(cell) for sizes (k-bounded result, broadcast
 # back), one window partitioned by cell — no pair join at all, so this
 # is strictly cheaper than the SemDeDup pass it follows.
-# Built as a round-11 preview; registered alongside dedup_semantic in
-# the sanctioned r12 promotion.
 
 _PROTO_TENTH = 10.0  # prune floor(n_cell / 10) most-prototypical
 
@@ -761,8 +557,8 @@ _PROTO_TENTH = 10.0  # prune floor(n_cell / 10) most-prototypical
 def proto_filter_frame(e: DataFrame, cells: list) -> DataFrame:
     """Core prototype-filter pass over a (vec_id, embedding) frame
     given the centroid artifact [(cell, cvec), ...] (or the
-    _semdedup_index dict — r15, same two-level assignment as the
-    SemDeDup pass, see _assigned_frame). Output:
+    _semdedup_index dict — the same assignment as the SemDeDup
+    pass, see _assigned_frame). Output:
     (vec_id, cell, proto_cos, proto_rank, is_kept) — rank 1 is the
     cell's most prototypical vector (ties by vec_id), and ranks
     1..floor(n_cell/10) are pruned."""
@@ -826,14 +622,14 @@ def emb_prototypes_oracle_sql(table: str = "embeddings") -> str:
 def emb_prototypes_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SSL-prototype pruning over the embeddings table: within each
     centroid cell, drop the floor(10%) of vectors closest to the
-    centroid. Round-11 preview promoted in round 12. Output:
+    centroid. Output:
     (vec_id, cell, proto_cos, proto_rank, is_kept)."""
     return proto_filter_frame(
         _embs(spark, sf_dir), _semdedup_index(spark, sf_dir)
     )
 
 
-# ------------- composed D4 pipeline (round-11 preview, third entry)
+# ------------- composed D4 pipeline
 #
 # The operator a user actually runs: SemDeDup prune, THEN the
 # SSL-prototype prune on the SURVIVORS — D4's two stages composed
@@ -906,22 +702,19 @@ def pipeline_d4_curation(
     """D4 end-to-end over the embeddings table. Output one row per
     input vector: (vec_id, cell, semdedup_kept, proto_rank, is_kept) —
     proto_rank is the rank AMONG SURVIVORS (-1 for semdedup-pruned
-    vectors), is_kept = survived both stages. Round-11 preview
-    promoted in round 12 (registered below, after the oracle text is
-    defined).
+    vectors), is_kept = survived both stages.
 
-    FUSED (r12): the SemDeDup frame carries the prototypicality score
+    FUSED: the SemDeDup frame carries the prototypicality score
     through its groupBy (with_cos=True — the centroids are a fixed
     artifact, so filtering cannot change the score), and the survivor
     ranks come from ONE window over that frame: ordering by
     (is_kept DESC, cos_raw DESC, vec_id) puts the survivors first in
     every cell, so their row_numbers 1..n_surv ARE the survivor-scoped
     prototype ranks, and the survivor count is a windowed conditional
-    sum. The r11 preview's shape — a third assignment pass over the
-    re-joined raw table plus two vec_id joins — is gone; the composed
-    pipeline is now exactly the SemDeDup shape plus one window
-    (plan probe: 8 → 2 in-memory assignment scans, 29 → 7
-    exchanges)."""
+    sum. The composed pipeline is exactly the SemDeDup shape plus one
+    window; a third assignment pass over the re-joined raw table plus
+    two vec_id joins read 8 in-memory assignment scans and 29
+    exchanges against this shape's 2 and 7."""
     from pyspark.sql import Window
 
     sd = semdedup_frame(

@@ -137,6 +137,26 @@ _HLL_ALPHA = 0.709  # alpha_64, Flajolet et al. 2007
 _HLL_M = 64
 
 
+def _hll_bucket_rho(hx) -> tuple:
+    """The (bucket, rho) register-update columns for an md5 hex column
+    — the arithmetic above, spelled as the oracles' `rho` CTEs spell
+    it."""
+    stripped = F.regexp_replace(F.substring(hx, 3, 13), "^0+", "")
+    first = F.substring(stripped, 1, 1)
+    lz_in_digit = (
+        F.when(first == "1", 3)
+        .when(first.isin("2", "3"), 2)
+        .when(first.isin("4", "5", "6", "7"), 1)
+        .otherwise(0)
+    )
+    return (
+        (F.conv(F.substring(hx, 1, 2), 16, 10).cast("bigint") % _HLL_M).alias(
+            "bucket"
+        ),
+        (4 * (13 - F.length(stripped)) + lz_in_digit + 1).alias("rho"),
+    )
+
+
 @register(
     "sketch_hll",
     survey="north-star: HyperLogLog distinct-count sketch (m=64, "
@@ -184,7 +204,7 @@ def sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     one power-sum + divide whose last ulp differs between Spark's pow
     and DuckDB's power, so per the catalog convention it is round(,4)-ed
     on both sides. Two cross-engine hazards hit this query historically:
-    the raw float estimate (fixed r4 via round) and DuckDB widening
+    the raw float estimate (fixed via round) and DuckDB widening
     sum(max_rho) to HUGEINT while Spark emits BIGINT — the oracle now
     CASTs reg_sum to BIGINT per the catalog's integer-sum convention.
     The small-range linear-counting correction (n < 2.5m = 160, needs
@@ -192,22 +212,8 @@ def sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not bit-stable. Accuracy (~1/sqrt(64) = 13% rel err) is pinned in
     tests/test_sketches.py."""
     li = load_table(spark, sf_dir, "lineitem")
-    hx = F.md5(F.col("l_orderkey").cast("string"))
-    stripped = F.regexp_replace(F.substring(hx, 3, 13), "^0+", "")
-    first = F.substring(stripped, 1, 1)
-    lz_in_digit = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
     regs = (
-        li.select(
-            (F.conv(F.substring(hx, 1, 2), 16, 10).cast("bigint") % _HLL_M).alias(
-                "bucket"
-            ),
-            (4 * (13 - F.length(stripped)) + lz_in_digit + 1).alias("rho"),
-        )
+        li.select(*_hll_bucket_rho(F.md5(F.col("l_orderkey").cast("string"))))
         .groupBy("bucket")
         .agg(F.max("rho").alias("max_rho"))
     )
@@ -457,22 +463,9 @@ def sketch_hll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     Estimate rounded to 4dp on both sides per the catalog convention
     (see sketch_hll)."""
     ev = load_table(spark, sf_dir, "events")
-    hx = F.md5(F.col("user_id").cast("string"))
-    stripped = F.regexp_replace(F.substring(hx, 3, 13), "^0+", "")
-    first = F.substring(stripped, 1, 1)
-    lz_in_digit = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
     regs = (
         ev.select(
-            "event_type",
-            (F.conv(F.substring(hx, 1, 2), 16, 10).cast("bigint") % _HLL_M).alias(
-                "bucket"
-            ),
-            (4 * (13 - F.length(stripped)) + lz_in_digit + 1).alias("rho"),
+            "event_type", *_hll_bucket_rho(F.md5(F.col("user_id").cast("string")))
         )
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("max_rho"))
@@ -633,22 +626,9 @@ _HLL_EST_SQL = (
 
 def _hll_regs_df(spark: SparkSession, sf_dir: str):
     ev = load_table(spark, sf_dir, "events")
-    hx = F.md5(F.col("user_id").cast("string"))
-    stripped = F.regexp_replace(F.substring(hx, 3, 13), "^0+", "")
-    first = F.substring(stripped, 1, 1)
-    lz_in_digit = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
     return (
         ev.select(
-            "event_type",
-            (
-                F.conv(F.substring(hx, 1, 2), 16, 10).cast("bigint") % _HLL_M
-            ).alias("bucket"),
-            (4 * (13 - F.length(stripped)) + lz_in_digit + 1).alias("rho"),
+            "event_type", *_hll_bucket_rho(F.md5(F.col("user_id").cast("string")))
         )
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("max_rho"))
@@ -901,22 +881,10 @@ def sketch_hll_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     it instead of a second full fact scan — the same
     lineage-inlining trap documented at sketch_qdigest."""
     ev = load_table(spark, sf_dir, "events")
-    hx = F.md5(F.col("user_id").cast("string"))
-    stripped = F.regexp_replace(F.substring(hx, 3, 13), "^0+", "")
-    first = F.substring(stripped, 1, 1)
-    lz_in_digit = (
-        F.when(first == "1", 3)
-        .when(first.isin("2", "3"), 2)
-        .when(first.isin("4", "5", "6", "7"), 1)
-        .otherwise(0)
-    )
     regs = (
         ev.select(
             F.date_trunc("day", "ts").cast("date").alias("d"),
-            (
-                F.conv(F.substring(hx, 1, 2), 16, 10).cast("bigint") % _HLL_M
-            ).alias("bucket"),
-            (4 * (13 - F.length(stripped)) + lz_in_digit + 1).alias("rho"),
+            *_hll_bucket_rho(F.md5(F.col("user_id").cast("string"))),
         )
         .groupBy("d", "bucket")
         .agg(F.max("rho").alias("max_rho"))

@@ -1598,24 +1598,44 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- embedding similarity
 
+def _dot(a, b):
+    """Dot product of two array columns, accumulated sequentially in
+    double (the order DuckDB's list_cosine_similarity uses)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _norm(a):
+    """Euclidean norm of an array column, same sequential order."""
+    return F.sqrt(
+        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+    )
+
+
 def _norm_dot(a, b):
     """Cosine over two array<float> columns, computed in double.
 
     Both engines accumulate the 64-dim dot product sequentially in
     double, so the result is bit-identical — no rounding needed.
     """
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _cos_topk(scored: DataFrame) -> DataFrame:
+    """The per-query top-_TOPK tail over (query_id, neighbor_id,
+    cos_raw) → (query_id, neighbor_id, cosine, rnk): cos DESC, ties by
+    neighbor id, the oracles' window order."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= _TOPK)
+        .select("query_id", "neighbor_id", _r("cos_raw", 4).alias("cosine"), "rnk")
     )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-    return dot / (na * nb)
 
 
 @register(
@@ -1691,9 +1711,7 @@ def sim_search_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"))
-    from pyspark.sql import Window
-
-    scored = (
+    return _cos_topk(
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -1701,12 +1719,6 @@ def sim_search_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             _norm_dot(F.col("q_emb"), F.col("c_emb")).alias("cos_raw"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "neighbor_id", _r("cos_raw", 4).alias("cosine"), "rnk")
     )
 
 
@@ -1824,10 +1836,10 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
             for row in centroids.collect()
         )
 
-    # Second level: the content-addressed disk artifact (r15, VERDICT
-    # r14 #3) — a fresh session (the driver always runs cold) loads the
-    # index instead of re-deriving it; the fingerprint over the
-    # embeddings bytes makes stale reuse impossible. JSON round-trips
+    # Second level: the content-addressed disk artifact — a fresh
+    # session (the correctness gate always runs cold) loads the index
+    # instead of re-deriving it; the fingerprint over the embeddings
+    # bytes makes stale reuse impossible. JSON round-trips
     # the round(,6) doubles exactly, so literal embedding stays
     # bit-identical to the oracle's recomputation either way.
     return session_cached(
@@ -1841,10 +1853,10 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
 
 def _fold_idx_sql(payload, ddl: str) -> str:
     """An index/codebook artifact as ONE constant-foldable expression:
-    ``from_json('<json>', '<ddl>')`` (r16; VERDICT r15 #2/#3).
+    ``from_json('<json>', '<ddl>')``.
 
-    The r15 generated-SQL literal form killed the per-value py4j
-    storm, but the values still rode the plan as an EXPRESSION TREE
+    A generated-SQL literal form kills the per-value py4j
+    storm, but the values still ride the plan as an EXPRESSION TREE
     (3 nodes per double: Cast(Literal(str))) — and PySpark DataFrame
     ops analyze eagerly, so every .select/.join over an index-bearing
     frame re-traversed the whole k·dim-node tree. pipeline_ann_ivfpq
@@ -1871,50 +1883,110 @@ def _fold_idx_sql(payload, ddl: str) -> str:
     return f"from_json('{js}', '{ddl}')"
 
 
-def _ivf_cent_arr(cells: list) -> F.Column:
-    """The centroid literal — array<struct<cell, cvec>> from the
-    _ivf_centroids artifact. ONE spelling for every consumer
-    (sim_search_ivf_topk, qa_ivf_index_audit, pipeline_ann_ivfpq),
-    extracted in the r13 review pass so the coarse quantizer cannot
-    drift between the index and the operators composed on it.
+_CELLS_T = "ARRAY<STRUCT<cell: INT, cvec: ARRAY<DOUBLE>, nrm: DOUBLE>>"
 
-    r16: one constant-foldable from_json literal (see _fold_idx_sql) —
-    the analyzed tree no longer grows with k·dim, and the folded
-    constant is bit-identical to the r15 CAST-text form."""
-    return F.expr(
-        _fold_idx_sql(
-            [
-                {"cell": int(cell), "cvec": [float(v) for v in vec]}
-                for cell, vec in cells
-            ],
-            "ARRAY<STRUCT<cell: INT, cvec: ARRAY<DOUBLE>>>",
+
+def _cells_payload(cells) -> list:
+    """A [[cell, cvec], ...] centroid list as the cell-literal payload
+    [{cell, cvec, nrm}, ...]. Each cell's norm is summed in Python in
+    the same sequential float64 order as _norm, so dot / (|emb|·nrm)
+    is bit-for-bit the _norm_dot cosine (and the oracles'
+    list_cosine_similarity) while the per-(row, cell) scoring skips
+    the constant cell-norm aggregate."""
+    import math
+
+    out = []
+    for cell, vec in cells:
+        s = 0.0
+        for v in vec:
+            s += float(v) * float(v)
+        out.append(
+            {"cell": int(cell), "cvec": [float(v) for v in vec], "nrm": math.sqrt(s)}
+        )
+    return out
+
+
+def _cells_lit(cells) -> F.Column:
+    """The centroid list as ONE constant-foldable cell literal
+    (_fold_idx_sql) — the one index spelling every nearest-centroid
+    consumer (the IVF tiers and the SemDeDup/D4 assignment) scores
+    against, so the routing cannot drift between them."""
+    return F.expr(_fold_idx_sql(_cells_payload(cells), _CELLS_T))
+
+
+def _ranked_cells(cand) -> F.Column:
+    """The cells of a cell-literal column ranked for the row's
+    `embedding`, fully narrow: (negcos, cell) structs sorted ascending
+    == (cos DESC, cell ASC) — negation of a double is exact, so the
+    order matches the oracles' window ORDER BY bit-for-bit.
+
+    The row norm is computed inline, per cell, on purpose: hoisting it
+    to a column does not help, because CollapseProject inlines the
+    column into the lambda anyway and leaves a second copy at every
+    other use (measured ~40% slower than the inline form)."""
+    emb = F.col("embedding")
+    return F.array_sort(
+        F.transform(
+            cand,
+            lambda c: F.struct(
+                (-(_dot(emb, c["cvec"]) / (_norm(emb) * c["nrm"]))).alias("negcos"),
+                c["cell"].alias("cell"),
+            ),
         )
     )
 
 
-def _ivf_ranked_cells(emb_col) -> F.Column:
-    """Per-vector cell ranking, fully narrow: score all k cells from
-    the bound `cells` literal column, sort by (-cos, cell) ascending
-    == (cos DESC, cell ASC) — negation of a double is exact, so the
-    tie-break order matches the oracles' window ORDER BY
-    bit-for-bit. ONE spelling for every consumer (see
-    _ivf_cent_arr)."""
-    scored = F.transform(
-        F.col("cells"),
-        lambda c: F.struct(
-            (-_norm_dot(emb_col, c["cvec"])).alias("negcos"),
-            c["cell"].alias("cell"),
-        ),
+def _ivf_probe_pairs(e: DataFrame, cells: list) -> DataFrame:
+    """The IVF probe join over a cell list → (cell, neighbor_id, c_emb,
+    query_id, q_emb): every corpus vector is routed to its nearest
+    cell, each query (vec_id < _ADC_NQUERY, the sim_search query set)
+    to its _NPROBE nearest, self-matches dropped. Assignment and
+    probing are narrow array_sorts over the cell literal, and the
+    |queries|·nprobe probe side is broadcast, so the corpus is never
+    exchanged. Each side gets its own _ranked_cells expression: the
+    two sides join back onto one lineage, and sharing the lambda
+    variables across them loses their bindings."""
+    with_cells = e.withColumn("cells", _cells_lit(cells))
+    assign = with_cells.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        F.element_at(_ranked_cells(F.col("cells")), 1)["cell"].alias("cell"),
     )
-    return F.array_sort(scored)
+    probes = (
+        with_cells.filter(F.col("vec_id") < _ADC_NQUERY)
+        .select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("q_emb"),
+            F.explode(
+                F.slice(_ranked_cells(F.col("cells")), 1, _NPROBE)
+            ).alias("pc"),
+        )
+        .select("query_id", "q_emb", F.col("pc")["cell"].alias("cell"))
+    )
+    return assign.join(F.broadcast(probes), "cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
 
 
-# The oracle-side twin of _ivf_ranked_cells: the coarse-ranking
+def _ivf_topk(spark: SparkSession, sf_dir: str, cells: list) -> DataFrame:
+    """IVF top-_TOPK over the embeddings table for a [[cell, cvec], ...]
+    coarse quantizer: probe pairs, pair cosine, the shared top-k tail."""
+    pairs = _ivf_probe_pairs(_embs(spark, sf_dir), cells)
+    return _cos_topk(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            _norm_dot(F.col("q_emb"), F.col("c_emb")).alias("cos_raw"),
+        )
+    )
+
+
+# The oracle-side twin of _ranked_cells: the coarse-ranking
 # window over an `embeddings e, centroids c` product — ONE SQL
 # spelling shared by sim_search_ivf_topk's oracle (both its assign
 # and probes CTEs) and pipeline_ann_ivfpq's (coarse and probes), so
 # the cell routing cannot drift between the index and anything
-# composed on it (r13 review #1).
+# composed on it.
 _IVF_RANK_SQL = (
     "row_number() OVER (\n"
     "                 PARTITION BY e.vec_id\n"
@@ -1992,66 +2064,21 @@ def sim_search_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates sequentially in double on both engines, ties break by
     id, so the full IVF pipeline hash-matches the oracle.
 
-    Plan shape (reworked in r4 — VERDICT r3 "Next round" #4): the r3
-    version ran TWO crossJoin+row_number windows (assignment and
-    probing), each a full exchange keyed on vec_id, and rebuilt the
-    centroids inside every query. Now the k=10 coarse quantizer is a
-    once-per-(app, sf_dir) index artifact (_ivf_centroids) embedded as
-    an array-of-structs literal, and per-vector cell ranking is a
-    NARROW array_sort over 10 (negcos, cell) pairs — zero shuffles and
-    zero broadcast jobs to assign the whole corpus. The only shuffle
-    left is the final per-query top-k window over probe candidates;
-    the probe side (queries × nprobe cells) is broadcast into the
-    corpus-side join, so the corpus is never exchanged at all.
+    Plan shape: the k=10 coarse quantizer is a once-per-(app, sf_dir)
+    index artifact (_ivf_centroids) embedded as one cell literal, and
+    per-vector cell ranking is a NARROW array_sort over 10 (negcos,
+    cell) pairs — zero shuffles and zero broadcast jobs to assign the
+    whole corpus (_ivf_probe_pairs). The only shuffle left is the
+    final per-query top-k window over probe candidates; the probe
+    side (queries × nprobe cells) is broadcast into the corpus-side
+    join, so the corpus is never exchanged at all. Two crossJoin +
+    row_number windows keyed on vec_id (assignment and probing) would
+    cost a full corpus exchange each.
     """
-    from pyspark.sql import Window
-
-    e = _embs(spark, sf_dir)
-    # The coarse quantizer is a build-once index artifact: k≈10 cells ×
-    # 64 doubles, computed once per (app, sf_dir) and embedded as a
-    # literal in every subsequent plan (_ivf_centroids below). This is
-    # the practical IVF contract — build the index once, serve many
-    # queries — and it removes the per-query centroid job + broadcast
-    # exchange from the critical path.
-    cells = _ivf_centroids(spark, sf_dir)
-    # shared spellings: _ivf_cent_arr / _ivf_ranked_cells (one
-    # expression for every consumer of the coarse quantizer)
-    with_cells = e.withColumn("cells", _ivf_cent_arr(cells))
-    assign = with_cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.element_at(_ivf_ranked_cells(F.col("embedding")), 1)["cell"].alias("cell"),
-    )
-    probes = (
-        with_cells.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.explode(
-                F.slice(_ivf_ranked_cells(F.col("embedding")), 1, _NPROBE)
-            ).alias("pc"),
-        )
-        .select("query_id", "q_emb", F.col("pc")["cell"].alias("cell"))
-    )
-
-    scored = (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _norm_dot(F.col("q_emb"), F.col("c_emb")).alias("cos_raw"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= _TOPK)
-        .select("query_id", "neighbor_id", _r("cos_raw", 4).alias("cosine"), "rnk")
-    )
+    return _ivf_topk(spark, sf_dir, _ivf_centroids(spark, sf_dir))
 
 
-# ------------- IVF index-quality audit (round-13 preview)
+# ------------- IVF index-quality audit
 #
 # The qa_lsh_recall_audit story applied to the OTHER ANN family: the
 # numbers an index team reads before trusting an IVF layout — per-cell
@@ -2074,31 +2101,29 @@ def sim_search_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: one narrow assignment pass (zero shuffles — the
 # centroid table is a literal), one map-side-combinable groupBy(cell)
 # to k rows, one k-row window. The window's SinglePartition is the
-# |cells|-bounded accounted shape. Registered r13 (the register call
-# follows ivf_audit_oracle_sql below).
+# |cells|-bounded accounted shape. The register call follows
+# ivf_audit_oracle_sql below.
 
 
 def qa_ivf_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index-quality audit over the embeddings table: one row per
     cell — occupancy, corpus share, and the cosine-to-own-centroid
-    spread (registered r13; r13 preview). Output: (cell, n_vectors,
-    share, mean_cos, min_cos, max_cos)."""
+    spread. Output: (cell, n_vectors, share, mean_cos, min_cos,
+    max_cos)."""
     from pyspark.sql import Window
 
     e = _embs(spark, sf_dir)
-    cells = _ivf_centroids(spark, sf_dir)
-    # shared spellings: _ivf_cent_arr / _ivf_ranked_cells
-    best = F.element_at(_ivf_ranked_cells(F.col("embedding")), 1)
-    assign = e.withColumn("cells", _ivf_cent_arr(cells)).select(
+    best = F.element_at(_ranked_cells(F.col("cells")), 1)
+    assign = e.withColumn("cells", _cells_lit(_ivf_centroids(spark, sf_dir))).select(
         best["cell"].alias("cell"),
         (-best["negcos"]).alias("cos_own"),
     )
     # min/max are taken over the SAME tick space as the mean (the
     # quantization is monotone, so min(tick) == tick(min)) — deriving
     # them from the raw doubles instead can break min <= mean <= max
-    # when a cell extremum sits within 5e-7 of a 4dp half boundary
-    # (review r13): mean would round from the tick while the extremum
-    # rounds from the raw value, landing on opposite sides.
+    # when a cell extremum sits within 5e-7 of a 4dp half boundary:
+    # mean would round from the tick while the extremum rounds from
+    # the raw value, landing on opposite sides.
     ticks = F.floor(F.col("cos_own") * 1e6 + 0.5).cast("long")
     per_cell = assign.groupBy("cell").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
@@ -2615,45 +2640,23 @@ register(
 # assignment + narrow code assignment on the corpus side (neither
 # exchanges the corpus), the |Q|·nprobe probe table and the M·k-row
 # LUT broadcast, one candidate equi-join on cell, one partial-sum
-# groupBy, one per-query top-k window. Registered late in r13 (the
-# register call follows ivfpq_oracle_sql below).
+# groupBy, one per-query top-k window. The register call follows
+# ivfpq_oracle_sql below.
 
 
 def pipeline_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN serving: coarse probe (nprobe=2 cells) + ADC
-    re-rank over the probed cells' PQ codes (registered r13; r13
-    late preview). Output: (query_id, neighbor_id, rank,
-    adc_d2_ticks) — top-3 per query among probed cells, self
-    excluded, ties by neighbor id."""
+    re-rank over the probed cells' PQ codes. Output: (query_id,
+    neighbor_id, rank, adc_d2_ticks) — top-3 per query among probed
+    cells, self excluded, ties by neighbor id."""
     from pyspark.sql import Window
 
     e = _embs(spark, sf_dir)
     cb = _pq_codebooks(spark, sf_dir)
-    cells = _ivf_centroids(spark, sf_dir)
-    # the registered IVF operator's narrow cell ranking — the SHARED
-    # _ivf_cent_arr / _ivf_ranked_cells spellings (r13 review: three
-    # hand-copies consolidated so the composition cannot drift)
-    with_cells = e.withColumn("cells", _ivf_cent_arr(cells))
-    coarse = with_cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.element_at(_ivf_ranked_cells(F.col("embedding")), 1)["cell"].alias(
-            "cell"
-        ),
-    )
-    probes = (
-        with_cells.filter(F.col("vec_id") < _ADC_NQUERY)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.slice(_ivf_ranked_cells(F.col("embedding")), 1, _NPROBE)
-            ).alias("pc"),
-        )
-        .select("query_id", F.col("pc")["cell"].alias("cell"))
-    )
-    cand = (
-        coarse.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
+    # the registered IVF operator's probe join, so the composition
+    # cannot drift from it
+    cand = _ivf_probe_pairs(e, _ivf_centroids(spark, sf_dir)).select(
+        "query_id", "neighbor_id"
     )
     codes = _pq_assign_frame(e, cb).select(
         F.col("vec_id").alias("neighbor_id"), "subspace", "code"
@@ -3454,7 +3457,6 @@ def sim_search_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    k = 10
     e = _embs(spark, sf_dir)
     # Deliberate driver-side collect: the QUERY set (not the corpus) is
     # collected and broadcast into the mapInPandas closure. Legal only
@@ -3499,7 +3501,7 @@ def sim_search_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
             cos = (q_t @ c_t.T).astype(np.float64) / (
                 q_nrm[:, None] * c_nrm[None, :]
             )
-            top = min(k + 1, cos.shape[1])  # +1: self may be in batch
+            top = min(_TOPK + 1, cos.shape[1])  # +1: self may be in batch
             # keep EVERYTHING >= the top-th score: exact ties at the
             # local cutoff must all survive to the global merge, or the
             # window's neighbor_id tie-break could pick a candidate a
@@ -3514,16 +3516,10 @@ def sim_search_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
                         out.append((int(q_ids[qi]), int(ids[ci]), float(cos[qi, ci])))
             yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cos_raw"])
 
-    from pyspark.sql import Window
-
-    local = e.select("vec_id", "embedding").mapInPandas(
-        score, "query_id LONG, neighbor_id LONG, cos_raw DOUBLE"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
-        local.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", _r("cos_raw", 4).alias("cosine"), "rnk")
+    return _cos_topk(
+        e.select("vec_id", "embedding").mapInPandas(
+            score, "query_id LONG, neighbor_id LONG, cos_raw DOUBLE"
+        )
     )
 
 
@@ -3536,11 +3532,11 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str, k: int = 10):
     on a sample (KMeans is iterative over the full set otherwise);
     centroids are tiny and ride into the scoring plan as literals.
 
-    The fitted centroids persist as a content-addressed disk artifact
-    (r15, VERDICT r14 #3): a learned coarse quantizer is an INDEX — a
-    real deployment trains it once per corpus and every session loads
-    it; re-fitting 20 LLoyd iterations per cold session was the
-    dominant cold cost of the IVF tier (15+ s). Consumers pin
+    The fitted centroids persist as a content-addressed disk artifact:
+    a learned coarse quantizer is an INDEX — a real deployment trains
+    it once per corpus and every session loads it; re-fitting 20
+    LLoyd iterations per cold session was the dominant cold cost of
+    the IVF tier (15+ s). Consumers pin
     centroid-independent invariants (recall floors, partition-function
     contracts), so a fit from a prior session with different task
     partitioning is exactly as valid as a fresh one."""
@@ -3630,7 +3626,9 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (not the label shortcut of sim_search_ivf_topk), frozen into the
     plan as literals, then the same assign → probe → in-cell top-k
     pipeline. Everything after the fit is the oracle-checked IVF code
-    path with a different centroid table.
+    path (_ivf_topk, which sim_search_ivf_topk runs) with a different
+    centroid table; tests/test_vectorized_ann.py checks the top-k
+    value-for-value against that entry's oracle text.
 
     The retrieved ids depend on the learned centroids (seed +
     partitioning), so the hash pins the retrieval CONTRACT: the query
@@ -3641,7 +3639,7 @@ def sim_search_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=2/10, and 3× under the worst aggregate measured across SFs
     (0.30 @ sf0.1, 0.46 @ sf0.001, 0.58 @ sf0.01). Per-query recall is
     the WRONG hashed invariant: it legitimately ranges 0.1–0.7 with
-    the corpus draw (a single query flapped the r7 local sf0.1 sweep),
+    the corpus draw (a single query flapped a local sf0.1 sweep),
     while the aggregate never approaches the floor; the sharper ≥0.3
     aggregate expectation stays pinned at smoke SF in
     tests/test_vectorized_ann.py. The raw top-k frame remains the
@@ -3693,55 +3691,8 @@ def _ivf_kmeans_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw learned-centroid IVF top-k (the user-facing frame)."""
-    from pyspark.sql import Window
-
-    cents = _kmeans_centroids(spark, sf_dir)
-    centroids = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cell INT, cvec ARRAY<DOUBLE>"
-    )
-    e = _embs(spark, sf_dir)
-
-    def nearest_cells(vecs: DataFrame, id_col: str, keep: int) -> DataFrame:
-        crossed = vecs.crossJoin(F.broadcast(centroids))
-        w = Window.partitionBy(id_col).orderBy(F.desc("cell_cos"), F.col("cell"))
-        return (
-            crossed.withColumn(
-                "cell_cos", _norm_dot(F.col("embedding"), F.col("cvec"))
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= keep)
-            .drop("cvec", "cell_cos", "rn")
-        )
-
-    assign = nearest_cells(e.select("vec_id", "embedding"), "vec_id", 1)
-    probes = nearest_cells(
-        e.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        ),
-        "query_id",
-        _NPROBE,
-    ).withColumnRenamed("embedding", "q_emb")
-    scored = (
-        probes.join(
-            assign.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("c_emb"),
-                "cell",
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _norm_dot(F.col("q_emb"), F.col("c_emb")).alias("cos_raw"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= _TOPK)
-        .select("query_id", "neighbor_id", _r("cos_raw", 4).alias("cosine"), "rnk")
+    return _ivf_topk(
+        spark, sf_dir, list(enumerate(_kmeans_centroids(spark, sf_dir)))
     )
 
 

@@ -129,10 +129,6 @@ ALLOWED = {
     # labeled brute-force baseline: corpus × broadcast query vectors
     # (the scale path is sim_search_ivf_topk / _lsh_buckets)
     "dedup_embedding_cosine": {"bnlj"},
-    # k≤10-row centroid dim broadcast under a nested-loop argmin; the
-    # flag appears only on a cold cache (the centroid frame is a
-    # literal-cached artifact), so allow it either way
-    "sim_search_ivf_kmeans": {"bnlj"},
     # --- r13 promotions (flag inventory recorded in NOTES.md r12).
     # two-phase distributed prefix sum: the ONE SinglePartition
     # exchange is the exclusive prefix over the corpus/B bucket

@@ -1,19 +1,20 @@
-"""r16: third (mid) assignment level of the scale-k SemDeDup index.
+"""The mid assignment level of the scale-k SemDeDup index.
 
-VERDICT r15 #9: two-level assignment is (10 + m)·dim per vector, so
-at m = 100 the assignment term re-grows with the corpus. The r16
-shape inserts a mid level — g = ceil(sqrt(m)) consecutive cos-buckets
-per group, rep = the group's MEDIAN member sub-centroid — once
-m >= _SEMDEDUP_L3_MIN_M, with g = m below the gate so every smaller
-scale (including every driver-checked SF, where m = 1) degenerates
-to the two-level r15 text value-for-value.
+For m > 1 the index assigns label → mid-group rep → sub-cell: a
+mid-group is g consecutive cos-buckets, its rep the group's MEDIAN
+member sub-centroid, with g = ceil(sqrt(m)) once
+m >= _SEMDEDUP_L3_MIN_M and g = m below it (one mid-group per label,
+so the assignment is nearest label → nearest of that label's
+sub-cells). Every gate-checked SF has m = 1 and takes the flat
+shape; the oracle text carries the same general form.
 
-These tests force the third level on the sf0.001 corpus by shrinking
-the occupancy constants (m = 25 >= patched gate, g = 5) and run the
-full CROSS-ENGINE differential: the Spark frame vs the DuckDB oracle
-chain regenerated under the same patched constants. That is the same
-evidence class as the driver's gate, on the code path the gate's
-m = 1 corpora can never reach.
+These tests force g = ceil(sqrt(m)) on the sf0.001 corpus by
+shrinking the occupancy constants (m = 25 >= patched gate, g = 5) and
+run the full CROSS-ENGINE differential: the Spark frame vs the DuckDB
+oracle chain regenerated under the same patched constants. That is
+the same evidence class as the correctness gate, on the code path the
+gate's m = 1 corpora can never reach; tests/test_semdedup_scale_k.py
+covers the g = m case (m = 3).
 """
 
 from __future__ import annotations

@@ -60,7 +60,7 @@ def big_sf(tmp_path_factory):
 def test_scaled_index_shape(spark, big_sf):
     import nyc_traffic_insight_spark.queries.embcurate as ec
 
-    cells = ec._semdedup_cells(spark, big_sf)
+    cells = ec._semdedup_index(spark, big_sf)["cells"]
     # 10 labels × m=3 sub-cells; empty sub-cells may drop out, but the
     # index must be strictly larger than the fixed-k base and bounded
     # by 10·m

@@ -70,6 +70,41 @@ def test_kmeans_ivf_recall(spark):
     assert all(r["retrieved_some"] and r["recall_floor_ok"] for r in audit)
 
 
+def test_kmeans_ivf_topk_matches_oracle(spark):
+    """The learned-centroid top-k value-for-value against DuckDB. The
+    registered sim_search_ivf_kmeans is an audit (its centroids come
+    from a seeded MLlib fit), but the top-k frame runs sim_search_ivf_topk's
+    probe path with a different centroid table — so its oracle is that
+    entry's registered text from `assign` on, behind the fitted
+    centroids spelled as a VALUES table."""
+    from nyc_traffic_insight_spark.queries.textops import (
+        _ivf_kmeans_topk,
+        _kmeans_centroids,
+    )
+    from tests.oracle_utils import compare, duck_connect
+
+    cents = [[float(v) for v in c] for c in _kmeans_centroids(spark, SF_SMOKE)]
+    # each vector as a string cast, so DuckDB parses every double with
+    # its own round-trip parser rather than as a DECIMAL literal
+    values = ", ".join(f"({i}, '{c}'::DOUBLE[])" for i, c in enumerate(cents))
+    centroids = f"SELECT * FROM (VALUES {values}) t(cell, cvec)"
+    oracle = load_all()["sim_search_ivf_topk"].oracle
+    sql = (
+        f"WITH centroids AS ({centroids}),\n    "
+        + oracle[oracle.index("assign AS (") :]
+    )
+    con = duck_connect(SF_SMOKE)
+    try:
+        seen = con.sql(centroids + " ORDER BY cell").fetchall()
+        assert [list(v) for _, v in seen] == cents  # bit-exact literal
+        want = con.sql(sql).df()
+    finally:
+        con.close()
+    got = _ivf_kmeans_topk(spark, SF_SMOKE).toPandas()
+    assert len(got) == 50  # 5 queries x top-10
+    compare(got, want, "ivf_kmeans_topk")
+
+
 def test_kmeans_clusters(spark):
     specs = load_all()
     rows = specs["ml_kmeans"].builder(spark, SF_SMOKE).collect()
